@@ -18,6 +18,7 @@ row-count / schema / value-hash comparison is exact:
 
 from __future__ import annotations
 
+import contextlib
 import os
 from collections.abc import Callable
 
@@ -369,8 +370,9 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # small_graph_threshold=0: exercise the distributed large-star/small-star
-    # path against the recursive-CTE oracle (the fast path is tested in pytest)
+    # small_graph_threshold=0: exercise the distributed path (local
+    # contraction, then star rounds) against the recursive-CTE oracle (the
+    # fast path is tested in pytest)
     return connected_components(edges, small_graph_threshold=0)
 
 
@@ -1328,6 +1330,19 @@ def q_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
+@contextlib.contextmanager
+def _shuffle_partitions(spark: SparkSession, n: int):
+    """Run one query at shuffle width ``n`` and give the session its own
+    width back, so no query changes what later queries run with."""
+    key = "spark.sql.shuffle.partitions"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, previous)
+
+
 def q_kg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end north-rule pipeline on deterministic synthetic pages,
     checked against the hand-derived planted-truth edge set (the seed
@@ -1340,17 +1355,17 @@ def q_kg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # tiny-input hygiene: a 150-page fixture gains nothing from wide
     # shuffles; 8 post-shuffle partitions keep the many-stage DAG snappy
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    pages = generate_pages(spark, 150)
-    out = build_kg(
-        spark, pages, seed_labels(spark), xrefs=seed_xrefs(spark), materialize=False
-    )
-    # lazy-mode caller owns the persisted frame: materialize the small
-    # projection, then release the cache (long-lived sessions otherwise
-    # accumulate one cached frame per invocation)
-    result = out["mappings"].select(
-        "subject_id", "predicate_id", "object_id", "confidence"
-    ).localCheckpoint()
+    with _shuffle_partitions(spark, 8):
+        pages = generate_pages(spark, 150)
+        out = build_kg(
+            spark, pages, seed_labels(spark), xrefs=seed_xrefs(spark), materialize=False
+        )
+        # lazy-mode caller owns the persisted frame: materialize the small
+        # projection, then release the cache (long-lived sessions otherwise
+        # accumulate one cached frame per invocation)
+        result = out["mappings"].select(
+            "subject_id", "predicate_id", "object_id", "confidence"
+        ).localCheckpoint()
     out["mappings"].unpersist()
     return result
 
@@ -1385,7 +1400,6 @@ def q_kg_evidence_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sssom_curator_spark.schema import LABELS_SCHEMA
     from sssom_curator_spark.sources.pages import generate_pages
 
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     rows = [
         # (prefix, identifier, name, norm_text): norm_text is the lexical
         # index key (synonym aliases share a key with a different name —
@@ -1415,17 +1429,18 @@ def q_kg_evidence_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         LABELS_SCHEMA,
     ).withColumn("embedding", F.lit(None).cast("array<double>"))
-    pages = generate_pages(
-        spark,
-        300,
-        labels=["alpha tocopherol acetate", "tocopherol acetate"],
-        mention_rate_pct=100,
-        hub_rate_pct=0,
-    )
-    out = build_kg(spark, pages, labels, materialize=False)
-    result = out["mappings"].select(
-        "subject_id", "predicate_id", "object_id", "confidence"
-    ).localCheckpoint()
+    with _shuffle_partitions(spark, 8):
+        pages = generate_pages(
+            spark,
+            300,
+            labels=["alpha tocopherol acetate", "tocopherol acetate"],
+            mention_rate_pct=100,
+            hub_rate_pct=0,
+        )
+        out = build_kg(spark, pages, labels, materialize=False)
+        result = out["mappings"].select(
+            "subject_id", "predicate_id", "object_id", "confidence"
+        ).localCheckpoint()
     out["mappings"].unpersist()
     return result
 

@@ -25,4 +25,11 @@ API and lets Catalyst/Tungsten pick physical strategies. Python appears only
 in vectorized (Arrow-batched) pandas UDFs.
 """
 
+import logging
+
 __version__ = "0.1.0"
+
+#: The engine's one logger. Adaptive choices (which path an operator took,
+#: how many rounds a loop ran) are recorded here; logging never starts a
+#: Spark job.
+log = logging.getLogger("sssom_curator_spark")

@@ -87,7 +87,7 @@ def positive_components(repository: DataFrame) -> DataFrame:
     charts.py:46-66) and pass the result to each report via their
     ``components=`` parameter — :func:`make_reports` does exactly that.
     The returned frame is already materialized (``connected_components``
-    ends in a ``localCheckpoint``), so fan-out reads don't recompute it.
+    returns checkpointed rows), so fan-out reads don't recompute it.
     """
     return connected_components(_positive_edges(repository))
 

@@ -11,13 +11,12 @@ diameter-D graph converges in ⌈log2 D⌉ rounds — O(log D) shuffles
 instead of the O(D) semi-naive frontier iteration.
 
 Scale shape per round: ONE self equi-join on the frontier's (dst = src)
-key plus a distinct — both shuffle on node ids, never on payloads;
-``localCheckpoint`` truncates lineage each round (same discipline as
-:mod:`sssom_curator_spark.graph.components`); convergence is the
-count + order-insensitive checksum pair (two scalar aggregates, no
-full-frame comparison). The closure relation is inherently
-O(reachable pairs) — quadratic in component size for dense cyclic
-graphs — so the operator is meant for the DAG-ish ontology hierarchies
+key plus a distinct — both shuffle on node ids, never on payloads. The
+rounds run in :func:`sssom_curator_spark.graph._iterate.iterate`: each
+is checkpointed, with its count + order-insensitive checksum observed on
+that job (no full-frame comparison, no scalar job). The closure relation
+is inherently O(reachable pairs) — quadratic in component size for dense
+cyclic graphs — so the operator is meant for the DAG-ish ontology hierarchies
 (skos:broader / rdfs:subClassOf trees) where |closure| ≈ depth × |V|;
 ``max_pairs`` guards against accidentally closing a social graph.
 """
@@ -27,18 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark import log
+from sssom_curator_spark.graph._iterate import checkpoint, checksum, iterate
+
 __all__ = ["bounded_reachability", "transitive_closure"]
-
-
-def _checksum(pairs: DataFrame) -> tuple[int, int]:
-    row = pairs.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal sum: order-insensitive and overflow-proof under ANSI mode
-        F.coalesce(
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"])
 
 
 def transitive_closure(
@@ -67,35 +58,41 @@ def transitive_closure(
     a cluster-filling job. The convergence count is reused for the bound
     check — no extra job.
     """
-    paths = (
+    metrics = checksum("src", "dst")
+    paths, scalars = checkpoint(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        metrics,
     )
-    prev = _checksum(paths)
-    for _ in range(max_iterations):
-        if max_pairs is not None and prev[0] > max_pairs:
+
+    def double(paths: DataFrame, scalars: dict) -> DataFrame:
+        if max_pairs is not None and scalars["n"] > max_pairs:
             raise ValueError(
                 f"transitive_closure: relation grew past max_pairs={max_pairs} "
-                f"({prev[0]} pairs) — input is likely not the DAG-ish "
+                f"({scalars['n']} pairs) — input is likely not the DAG-ish "
                 "hierarchy this operator is designed for"
             )
         hop = (
             paths.alias("p")
-            .join(
-                paths.alias("q"),
-                on=F.col("p.dst") == F.col("q.src"),
-            )
+            .join(paths.alias("q"), on=F.col("p.dst") == F.col("q.src"))
             .select(F.col("p.src").alias("src"), F.col("q.dst").alias("dst"))
         )
-        paths = paths.union(hop).distinct().localCheckpoint()
-        cur = _checksum(paths)
-        if cur == prev:
-            break
-        prev = cur
-    return paths
+        return paths.union(hop).distinct()
+
+    loop = iterate(
+        "transitive_closure",
+        paths,
+        double,
+        steps=max_iterations,
+        scalars=scalars,
+        metrics=metrics,
+        converge=True,
+    )
+    if not loop.converged:
+        log.warning("transitive_closure: %d rounds did not converge", max_iterations)
+    return loop.frame
 
 
 def bounded_reachability(
@@ -115,11 +112,14 @@ def bounded_reachability(
     seeds at dist 0; unmatched seeds are ignored. BFS layers give the
     true minimum distance by construction.
 
-    Scale shape: the edge list is checkpointed and persisted
-    src-partitioned once; each round joins the FRONTIER (shrinking,
-    node-sized) against it and anti-joins the visited set — per-round
-    shuffles carry only node ids. Early exit on an empty frontier, so
-    the round count is min(max_depth, eccentricity).
+    Scale shape: the edge list is checkpointed once; each round joins
+    the FRONTIER (the visited nodes at the deepest distance so far,
+    shrinking, node-sized) against it and anti-joins the visited set —
+    per-round shuffles carry only node ids. The rounds run in
+    :func:`sssom_curator_spark.graph._iterate.iterate`, which observes the
+    visited count and the deepest distance on each round's checkpoint;
+    unchanged values (an empty frontier) end the loop, so the round
+    count is min(max_depth, eccentricity + 1).
     """
     if max_depth < 0:
         raise ValueError(f"max_depth must be >= 0, got {max_depth}")
@@ -129,31 +129,34 @@ def bounded_reachability(
         .distinct()
         .localCheckpoint()
     )
-    ep = e.repartition("src").persist()
-    ep.count()
-    graph_nodes = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst"))
-    ).distinct()
-    visited = (
+    graph_nodes = e.select(F.col("src").alias("node")).union(e.select("dst"))
+    metrics = {"n": F.count(F.lit(1)), "depth": F.coalesce(F.max("dist"), F.lit(0))}
+    visited, scalars = checkpoint(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .join(graph_nodes, on="node", how="left_semi")
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
+        .select("node", F.lit(0).cast("long").alias("dist")),
+        metrics,
     )
-    frontier = visited.select("node")
-    for depth in range(1, max_depth + 1):
+
+    def expand(visited: DataFrame, scalars: dict) -> DataFrame:
+        depth = scalars["depth"]
+        frontier = visited.filter(F.col("dist") == depth).select("node")
         nxt = (
-            ep.join(frontier, on=ep["src"] == frontier["node"])
+            e.join(frontier, on=e["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, on="node", how="left_anti")
-            .select("node", F.lit(depth).cast("long").alias("dist"))
-            .localCheckpoint()
+            .select("node", F.lit(depth + 1).cast("long").alias("dist"))
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt).localCheckpoint()
-        frontier = nxt.select("node")
-    ep.unpersist()
-    return visited
+        return visited.union(nxt)
+
+    return iterate(
+        "bounded_reachability",
+        visited,
+        expand,
+        steps=max_depth,
+        scalars=scalars,
+        metrics=metrics,
+        converge=True,
+    ).frame

@@ -1,84 +1,54 @@
-"""Connected components via alternating large-star / small-star joins (G1).
+"""Connected components: local union-find, then large-star/small-star
+rounds on CURIE strings (G1).
 
 The reference calls ``nx.connected_components`` over the in-memory positive
 mapping graph (export/charts.py:46-66) and uses single-source reachability
 for the mutual-mapping filter (predict/lexical.py:403-456). Neither
-survives a 10^12-node graph; this module implements the two-phase
-large-star/small-star algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) with plain DataFrame joins/aggregations:
+survives a 10^12-node graph. :func:`connected_components` plans instead:
 
-- O(log n) rounds instead of O(diameter) label propagation;
-- every round is two self-joins + two aggregations on the edge list —
-  no ``collect_list`` (a 10M-degree hub node never materializes its
-  neighborhood in one task);
-- per-round ``localCheckpoint`` truncates lineage so plans stay flat;
-- convergence test = count + order-insensitive checksum of the edge set
-  (two scalar aggregates, no full comparison shuffle).
+1. **Small graphs** (at most ``small_graph_threshold`` edges): one
+   ``limit().collect()`` and plain union-find on the driver, the same
+   local-relation shortcut Catalyst applies to tiny inputs.
+2. **Local contraction.** Otherwise the edges are hash-partitioned on
+   their source and each partition runs the same union-find in a
+   ``mapInPandas`` task, emitting a parent link ``(node, local_root)``
+   for every node it saw, roots linked to themselves: the same
+   connectivity, with every in-partition component already a star
+   (contract locally before global rounds, as in *BTS: Load-Balanced
+   Distributed Union-Find*, ICDE 2024). A task holds parent pointers,
+   never its edge list.
+3. **Star rounds** (Kiveris et al., "Connected Components in MapReduce
+   and Beyond", SoCC'14) on those links, with CURIE strings as node ids:
+   O(log n) rounds of a large-star and a small-star step, each step one
+   window ``min`` per node — no ``collect_list``. The loop is
+   :func:`sssom_curator_spark.graph._iterate.iterate`: the link count and
+   an order-insensitive checksum are observed on each round's checkpoint
+   job, and equal values on consecutive rounds end it.
+4. Converged, the links are exactly one ``(node, smallest CURIE of its
+   component)`` per node — the north rule's canonical CURIE, which
+   canonicalization maps every member to — and are the output. Links
+   that are already a star forest converge after one round.
 
-String node ids (CURIEs) are dictionary-encoded to longs once at the start
-(``monotonically_increasing_id`` — no global sort), and the final component
-representative is the *minimum CURIE string* per component, which makes the
-output deterministic regardless of internal id assignment. That
-representative is exactly the north rule's canonical CURIE: the
-canonicalization step maps every member to its component rep.
+Both paths pick the same representative, so the output depends on neither
+the path, the partitioning nor the session's history.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Iterable, Iterator
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from sssom_curator_spark import log
+from sssom_curator_spark.graph._iterate import checkpoint, checksum, iterate
 
 __all__ = ["connected_components", "canonicalize_mappings"]
 
 
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    return edges.union(rev)
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
-    sym = _symmetrize(edges)
-    mins = sym.groupBy("u").agg(F.min("v").alias("min_v"))
-    mins = mins.select("u", F.least("u", "min_v").alias("m"))
-    return (
-        sym.filter(F.col("v") > F.col("u"))
-        .join(mins, on="u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient edges to parent pointers (u > v) and connect all small
-    neighbors (and u itself) to the minimum."""
-    oriented = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    mins = oriented.groupBy("u").agg(F.min("v").alias("min_v"))
-    mins = mins.select("u", F.least("u", "min_v").alias("m"))
-    relinked = (
-        oriented.join(mins, on="u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(mins.select(F.col("u"), F.col("m").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    return relinked
-
-
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal sum: order-insensitive and overflow-proof under ANSI mode
-        F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"])
-
-
-def _driver_union_find(rows: list) -> list[tuple[str, str]]:
-    """Small-graph fast path: plain union-find on collected edges."""
+def _union_find(pairs: Iterable[tuple[str, str]]) -> list[tuple[str, str]]:
+    """``(node, smallest node of its component)`` for every node of
+    ``pairs``; the one kernel of both the driver path and the contraction."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -90,18 +60,45 @@ def _driver_union_find(rows: list) -> list[tuple[str, str]]:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in rows:
+    for a, b in pairs:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[ra] = rb
-    members: dict[str, list[str]] = {}
+    rep: dict[str, str] = {}
     for node in parent:
-        members.setdefault(find(node), []).append(node)
-    out = []
-    for group in members.values():
-        rep = min(group)
-        out.extend((node, rep) for node in group)
-    return out
+        root = find(node)
+        rep[root] = min(rep.get(root, node), node)
+    return [(node, rep[find(node)]) for node in parent]
+
+
+def _contract(batches: Iterator) -> Iterator:
+    """``mapInPandas`` body: union-find over one task's edges."""
+    import pandas as pd
+
+    pairs = (p for pdf in batches for p in zip(pdf["a"], pdf["b"]))
+    yield pd.DataFrame(_union_find(pairs), columns=["u", "v"])
+
+
+def _link(child: Column, parent: Column) -> Column:
+    return F.struct(child.alias("u"), parent.alias("v"))
+
+
+def _star_round(e: DataFrame, _scalars: dict) -> DataFrame:
+    """One large-star then one small-star step over parent links
+    ``u -> v`` (``u >= v``); every node keeps a link, roots to themselves."""
+    by_u = Window.partitionBy("u")
+    u, v, m = F.col("u"), F.col("v"), F.col("m")
+    sym = e.union(e.select(v.alias("u"), u.alias("v")))
+    # large star: link u and its larger neighbors to min(N(u) ∪ {u})
+    large = sym.withColumn("m", F.least(u, F.min(v).over(by_u))).select(
+        F.inline(F.array(_link(F.greatest(u, v), m), _link(u, m)))
+    )
+    # small star: link u and its (smaller) neighbors to their minimum
+    return (
+        large.withColumn("m", F.min(v).over(by_u))
+        .select(F.inline(F.array(_link(v, m), _link(u, m))))
+        .distinct()
+    )
 
 
 def connected_components(
@@ -115,15 +112,10 @@ def connected_components(
     """Label every node with its component representative.
 
     Input: an edge DataFrame with string endpoint columns ``src``/``dst``.
-    Output: ``(node:string, component:string)`` covering every endpoint,
-    where ``component`` is the lexicographically smallest CURIE in the
-    node's component.
-
-    Edge sets under ``small_graph_threshold`` collect to the driver and run
-    plain union-find — the same local-relation shortcut Catalyst applies to
-    tiny inputs; the iterative distributed algorithm only pays off past
-    memory scale. Output is identical either way (both pick the min-CURIE
-    representative).
+    Output, materialized: ``(node:string, component:string)`` covering
+    every endpoint, where ``component`` is the lexicographically smallest
+    CURIE in the node's component. ``max_iterations`` bounds the star
+    rounds; reaching it unconverged is logged as a warning.
     """
     spark = edges.sparkSession
     pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
@@ -134,50 +126,32 @@ def connected_components(
         if len(sample) <= small_graph_threshold:
             import pandas as pd
 
-            labeled = _driver_union_find([(r["a"], r["b"]) for r in sample])
+            log.info("connected_components: small path, %d edges on the driver", len(sample))
+            labeled = _union_find((r["a"], r["b"]) for r in sample)
             # Arrow path: a plain-list createDataFrame would re-evaluate
             # through pickle python workers on every downstream use.
             pdf = pd.DataFrame(labeled or [], columns=["node", "component"])
             return spark.createDataFrame(pdf, "node string, component string")
-    nodes = (
-        pairs.select(F.col("a").alias("curie"))
-        .union(pairs.select("b"))
-        .distinct()
-        .withColumn("id", F.monotonically_increasing_id())
-        .persist()
+    log.info("connected_components: distributed path")
+    metrics = checksum("u", "v")
+    links, scalars = checkpoint(
+        pairs.repartition("a").mapInPandas(_contract, "u string, v string"), metrics
     )
-    nodes.count()  # pin ids: monotonically_increasing_id must be computed once
-
-    e = (
-        pairs.join(nodes.withColumnRenamed("curie", "a").withColumnRenamed("id", "u"), on="a")
-        .join(nodes.withColumnRenamed("curie", "b").withColumnRenamed("id", "v"), on="b")
-        .select("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+    loop = iterate(
+        "connected_components",
+        links,
+        _star_round,
+        steps=max_iterations,
+        scalars=scalars,
+        metrics=metrics,
+        converge=True,
     )
-
-    prev = _checksum(e)
-    for _ in range(max_iterations):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        cur = _checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-
-    # Converged state is a forest of stars: every edge is (member, root).
-    roots = _symmetrize(e).groupBy("u").agg(F.min("v").alias("root"))
-    roots = roots.select("u", F.least("u", "root").alias("root"))
-    membership = (
-        nodes.join(roots, nodes["id"] == roots["u"], "left")
-        .select("curie", F.coalesce("root", "id").alias("root"))
-    )
-    # Deterministic representative: min CURIE string per component.
-    reps = membership.groupBy("root").agg(F.min("curie").alias("component"))
-    out = membership.join(reps, on="root").select(F.col("curie").alias("node"), "component")
-    result = out.localCheckpoint()
-    nodes.unpersist()
-    return result
+    # converged, the links are exactly one (node, representative) per node
+    links = loop.frame
+    if not loop.converged:
+        log.warning("connected_components: %d rounds did not converge", max_iterations)
+        links = links.groupBy("u").agg(F.min("v").alias("v")).localCheckpoint()
+    return links.select(F.col("u").alias("node"), F.col("v").alias("component"))
 
 
 def canonicalize_mappings(

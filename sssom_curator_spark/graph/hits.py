@@ -7,24 +7,39 @@ flat PageRank score conflates. Fixed iteration count keeps the result
 deterministic and SQL-replayable (one CTE pair per iteration in the
 DuckDB oracle), exactly like :mod:`sssom_curator_spark.graph.pagerank`.
 
-Scale shape mirrors pagerank: the deduplicated edge list is checkpointed
-once and persisted TWICE — src-partitioned for the authority half-step,
-dst-partitioned for the hub half-step, so neither direction re-shuffles
-edges per iteration; each
-half-step is one equi-join + map-side-partial sum keyed on the receiving
-endpoint (a 10M-in-degree hub never materializes its edge list in one
-task); the L2 normalizer rides as a one-row broadcast frame — no driver
-round-trip per iteration; per-step ``localCheckpoint`` keeps plans flat.
+The plan:
+- the deduplicated edge list is checkpointed once and every half-step
+  reads those blocks;
+- the state is one node-keyed frame ``(node, hub, authority)``. A
+  half-step left-joins it to the edges once and emits two rows per edge:
+  the score sent to the far end, and the node's own row (the zero fill,
+  carrying the other score). A sum per node with map-side partials
+  folds them — no node join and no final hub/authority join;
+- the step loop is :func:`sssom_curator_spark.graph._iterate.iterate`,
+  which checkpoints every few steps (each step reads its state once, so
+  a few steps make one shallow plan). Both L2 norms are observed on each
+  checkpoint job. Scaling a score vector does not change the direction
+  of the next half-step, so the hub scores enter a step divided by the
+  latest observed norm as a literal — which only bounds their magnitude
+  between checkpoints — and only the final frame is normalized exactly.
+  No norm runs a job of its own, and no one-row norm frame is
+  cross-joined into the plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark.graph._iterate import iterate
 from sssom_curator_spark.operators.textstats import stable_round
 
 __all__ = ["hits"]
+
+
+def _scaled(col: str, norm: float) -> Column:
+    """``col / norm``, and 0 for an all-zero vector."""
+    return F.col(col) / F.lit(norm) if norm > 0 else F.lit(0.0)
 
 
 def hits(
@@ -46,89 +61,47 @@ def hits(
         .distinct()
         .localCheckpoint()
     )
-    # Right-size the persisted frames to the graph, not the session's
-    # shuffle width (guide §2.2): repartition("key") inherits
-    # spark.sql.shuffle.partitions, so a 60-node graph was cached in 64
-    # partitions and every half-step scanned them all — pure scheduler
-    # latency. The edge frame is already materialized; ~1M edges per
-    # cached partition keeps big graphs wide.
-    m = e.count()
-    width = e.sparkSession.sparkContext.defaultParallelism
-    parts = max(1, min(width, m // 1_000_000 + 1))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .repartition(parts, "node")
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        out = nodes.select(
-            "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
-        ).localCheckpoint()
-        nodes.unpersist()
-        return out
-    # TWO persisted edge copies, one per half-step key: the authority step
-    # joins on src, the hub step on dst — a single src-partitioned copy
-    # would force an edge-sized re-shuffle by dst every iteration.
-    ep_src = e.repartition(parts, "src").persist()
-    ep_src.count()
-    ep_dst = e.repartition(parts, "dst").persist()
-    ep_dst.count()
 
-    def _l2(df: DataFrame, col: str) -> DataFrame:
-        # Checkpoint the RAW half-step, not the normalized one: the raw
-        # frame (an edge-sized join + aggregate) has two consumers — the
-        # norm aggregate and the normalized projection — and would
-        # otherwise execute twice inside the materialization job. The
-        # normalized frame is a lazy division over checkpoint blocks.
-        raw = df.localCheckpoint()
-        norm = raw.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("_norm"))
+    def half_step(st: DataFrame, key: str, score: str, norm: float, keep: str) -> DataFrame:
+        """Each node sends ``keep / norm`` along its ``key``-side edges;
+        its new ``score`` is the sum it receives, and its ``keep`` rides
+        along."""
+        far = "dst" if key == "src" else "src"
         return (
-            raw.crossJoin(F.broadcast(norm))
+            st.join(e, on=st["node"] == e[key], how="left")
             .select(
-                "node",
-                F.when(F.col("_norm") > 0, F.col(col) / F.col("_norm"))
-                .otherwise(F.lit(0.0))
-                .alias(col),
+                F.inline(
+                    F.array(
+                        F.struct(
+                            F.col(far).alias("node"),
+                            _scaled(keep, norm).alias(score),
+                            F.lit(None).cast("double").alias(keep),
+                        ),
+                        F.struct("node", F.lit(0.0).alias(score), keep),
+                    )
+                )
             )
+            .filter(F.col("node").isNotNull())
+            .groupBy("node")
+            .agg(F.sum(score).alias(score), F.max(keep).alias(keep))
         )
 
-    hubs = nodes.select("node", F.lit(1.0).alias("hub")).localCheckpoint()
-    auths = nodes.select("node", F.lit(1.0).alias("authority"))
-    for _ in range(iterations):
-        a_raw = (
-            ep_src.join(hubs, on=ep_src["src"] == hubs["node"])
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("_a"))
-        )
-        auths = _l2(
-            nodes.join(a_raw, on=nodes["node"] == a_raw["dst"], how="left").select(
-                "node", F.coalesce("_a", F.lit(0.0)).alias("authority")
-            ),
-            "authority",
-        )
-        h_raw = (
-            ep_dst.join(auths, on=ep_dst["dst"] == auths["node"])
-            .groupBy("src")
-            .agg(F.sum("authority").alias("_h"))
-        )
-        hubs = _l2(
-            nodes.join(h_raw, on=nodes["node"] == h_raw["src"], how="left").select(
-                "node", F.coalesce("_h", F.lit(0.0)).alias("hub")
-            ),
-            "hub",
-        )
-    out = hubs.join(auths, on="node")
+    def step(st: DataFrame, scalars: dict) -> DataFrame:
+        # authority = A^T hub, then hub = A authority
+        auth = half_step(st, "src", "authority", scalars["hub"], "hub")
+        return half_step(auth, "dst", "hub", 1.0, "authority")
+
+    scores = ("hub", "authority")
+    nodes = e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
+    loop = iterate(
+        "hits",
+        nodes.select("node", *[F.lit(1.0).alias(c) for c in scores]),
+        step,
+        steps=iterations,
+        scalars=dict.fromkeys(scores, 1.0),
+        metrics={c: F.coalesce(F.sqrt(F.sum(F.col(c) * F.col(c))), F.lit(0.0)) for c in scores},
+    )
+    out = [_scaled(c, loop.scalars[c]) for c in scores]
     if round_to is not None:
-        out = out.select(
-            "node",
-            stable_round(F.col("hub"), round_to).alias("hub"),
-            stable_round(F.col("authority"), round_to).alias("authority"),
-        )
-    out = out.localCheckpoint()
-    nodes.unpersist()
-    ep_src.unpersist()
-    ep_dst.unpersist()
-    return out
+        out = [stable_round(c, round_to) for c in out]
+    return loop.frame.select("node", *[c.alias(name) for c, name in zip(out, scores)])

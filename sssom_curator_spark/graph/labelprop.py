@@ -12,10 +12,11 @@ engines, and determinism is the contract every operator here keeps with
 its DuckDB oracle.
 
 Scale shape per iteration: one equi-join of the symmetric adjacency
-against the node-sized label frame (edges persisted src-partitioned
-once — only labels shuffle), one (node, label) count aggregation with
+(a projection over the checkpointed undirected edges) against the
+node-sized label frame, one (node, label) count aggregation with
 map-side partials, and one ``min(struct(-count, label))`` argmax — no
-windows, no sorts; ``localCheckpoint`` per round keeps plans flat.
+windows, no sorts. :func:`sssom_curator_spark.graph._iterate.iterate`
+runs the rounds, checkpointing every few to keep plans shallow.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sssom_curator_spark.graph._edges import symmetric_adjacency, undirected_edges
+from sssom_curator_spark.graph._iterate import iterate
 
 __all__ = ["label_propagation"]
 
@@ -40,26 +42,22 @@ def label_propagation(
     id; isolated nodes never appear — they are their own community by
     definition). Deterministic: the update is argmax by
     ``(count DESC, label ASC)``."""
-    und = undirected_edges(edges, src, dst)
-    adj = symmetric_adjacency(und).repartition("m").persist()
-    adj.count()
-    labels = adj.select(F.col("n").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    ).localCheckpoint()
-    for _ in range(iterations):
+    adj = symmetric_adjacency(undirected_edges(edges, src, dst))
+
+    def step(labels: DataFrame, _scalars: dict) -> DataFrame:
         votes = (
             adj.join(labels, on=adj["m"] == labels["node"])
             .groupBy("n", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        return (
             votes.groupBy("n")
             .agg(
                 F.min(F.struct((-F.col("c")).alias("nc"), F.col("label").alias("l")))
                 .alias("_w")
             )
             .select(F.col("n").alias("node"), F.col("_w.l").alias("label"))
-            .localCheckpoint()
         )
-    adj.unpersist()
-    return labels
+
+    labels = adj.select(F.col("n").alias("node"), F.col("n").alias("label")).distinct()
+    return iterate("label_propagation", labels, step, steps=iterations).frame

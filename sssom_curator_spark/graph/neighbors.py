@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark import log
 from sssom_curator_spark.graph._edges import symmetric_adjacency, undirected_edges
 from sssom_curator_spark.operators.textstats import stable_round
 
@@ -55,9 +56,7 @@ def neighbor_jaccard(
         hubs = deg.filter(F.col("d") > max_degree).select(F.col("m").alias("n"))
         n_hubs = hubs.count()
         if n_hubs:
-            import logging
-
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "neighbor_jaccard: dropping %d hub neighbors with degree > %d "
                 "from the wedge join (scores for pairs sharing them are "
                 "lower bounds)",

@@ -11,23 +11,19 @@ to float-epsilon behavior). One chassis serves the uniform, weighted,
 and personalized (seed-teleport) variants — the uniform case is the
 seeded case with t = 1/N, so every scale fix lands once.
 
-Scale shape:
-- the edge frame joined with out-degrees is computed ONCE, repartitioned
-  on ``src`` and persisted — each iteration's rank join reuses those
-  cached partitions, so the per-iteration shuffle carries only the rank
-  frame (two columns per node), never the edges;
-- contributions aggregate with a map-side partial ``sum`` keyed on
-  ``dst`` — a 10M-in-degree hub page never materializes its in-edge list
-  in one task;
-- the dangling-node SET is loop-invariant and materialized once; its
-  per-iteration rank mass rides as a one-row broadcast frame cross-joined
-  into the update — no driver round-trip per iteration;
-- per-iteration ``localCheckpoint`` keeps the plan flat (same discipline
-  as :mod:`sssom_curator_spark.graph.components`); the checkpoint blocks
-  are NODE-sized (two columns), the explicit edge/node persists are
-  released before returning, and superseded iteration checkpoints are
-  reclaimed by Spark's ContextCleaner as their Datasets drop
-  (plan-pinned in ``tests/test_plans.py::TestPageRankEdgeReuse``).
+The plan:
+- the deduplicated edge list is checkpointed once, and every step's
+  rank join reads those blocks;
+- the state is one node-keyed frame ``(node, _deg, _s, rank)``:
+  out-degree (null when the node dangles), seed flag, rank. A step joins
+  it to the edges and sums, per receiving node with map-side partials,
+  each edge's contribution plus one zero row per node that carries the
+  node's other columns — no node join, and a 10M-in-degree hub page
+  never materializes its in-edge list in one task;
+- the loop is :func:`sssom_curator_spark.graph._iterate.iterate`. The
+  dangling mass is observed on each step's checkpoint job and read by
+  the next step as a literal, like the node and seed counts observed on
+  the first checkpoint; no scalar runs a job of its own.
 """
 
 from __future__ import annotations
@@ -35,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark.graph._iterate import checkpoint, iterate
 from sssom_curator_spark.operators.textstats import stable_round
 
 __all__ = ["pagerank", "personalized_pagerank"]
@@ -71,129 +68,72 @@ def pagerank(
     ranks only — internal iterations keep full precision; pass ``None``
     for raw doubles.
     """
-    if weight is None:
-        e = (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .distinct()
-            .withColumn("_w", F.lit(1.0))
-        )
-    else:
-        e = (
-            edges.select(
-                F.col(src).alias("src"),
-                F.col(dst).alias("dst"),
-                F.col(weight).cast("double").alias("_w"),
-            )
-            .filter(
-                F.col("src").isNotNull()
-                & F.col("dst").isNotNull()
-                & (F.col("_w") > 0)
-            )
-            .groupBy("src", "dst")
-            .agg(F.sum("_w").alias("_w"))
-        )
-    # Materialize the edge projection ONCE: four consumers follow (both
-    # node-set unions, the out-degree aggregation, the partitioned copy),
-    # and when the edge list derives from an expensive upstream chain
-    # (html → links → domain graph) each consumer would re-run it. The
-    # edge list is graph-sized — bounded, unlike the corpus it came from.
-    e = e.localCheckpoint()
-    # Right-size the persisted frames to the GRAPH, not the session's
-    # shuffle width (guide §2.2): repartition("key") inherits
-    # spark.sql.shuffle.partitions, so a 60-node domain graph was cached
-    # in 64 partitions and every one of the 5 iterations scanned 64 cached
-    # partitions per stage — pure scheduler latency. The edge frame is
-    # already materialized, so its count is a cheap metadata-ish job;
-    # ~1M edges per cached partition keeps big graphs wide.
-    m = e.count()
-    width = e.sparkSession.sparkContext.defaultParallelism
-    parts = max(1, min(width, m // 1_000_000 + 1))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .repartition(parts, "node")
-        .persist()
+    w = F.lit(1.0) if weight is None else F.col(weight).cast("double")
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("_w")).filter(
+        F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("_w") > 0)
     )
-    n = nodes.count()  # also pins the node cache
+    e = e.distinct() if weight is None else e.groupBy("src", "dst").agg(F.sum("_w").alias("_w"))
+    e = e.localCheckpoint()
+    # one row per edge end; the sum per node is its out-degree, null for a
+    # node that only receives (it dangles)
+    nodes = (
+        e.select(F.col("src").alias("node"), F.col("_w").alias("_deg"))
+        .union(e.select(F.col("dst"), F.lit(None).cast("double")))
+        .groupBy("node")
+        .agg(F.sum("_deg").alias("_deg"))
+    )
+    if seeds is None:
+        nodes = nodes.withColumn("_s", F.lit(True))
+    else:  # _s is null off the seeds
+        seeded = seeds.select(F.col(seed_col).alias("node"), F.lit(True).alias("_s"))
+        nodes = nodes.join(seeded.distinct(), on="node", how="left")
+    dangles = F.col("_deg").isNull()
+    nodes, counts = checkpoint(
+        nodes,
+        {
+            "n": F.count(F.lit(1)),
+            "ns": F.count("_s"),
+            "ns_dangling": F.count(F.when(dangles, F.col("_s"))),
+        },
+    )
+    if seeds is not None and counts["ns"] == 0:
+        raise ValueError("pagerank: no seed matches any graph node")
+    if counts["n"] == 0:
+        return nodes.select("node", F.lit(0.0).alias("rank"))
+    # teleport share: 1/N everywhere, or 1/|seeds| on the seeds
+    t = F.when(F.col("_s"), F.lit(1.0 / counts["ns"])).otherwise(F.lit(0.0))
 
-    tele = None
-    if seeds is not None:
-        # validate BEFORE the empty-graph return: in an empty graph every
-        # seed is unmatched and the documented ValueError must still fire
-        seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-        matched = nodes.join(seed_nodes, on="node", how="left_semi").localCheckpoint()
-        ns = matched.count()
-        if ns == 0:
-            nodes.unpersist()
-            raise ValueError("pagerank: no seed matches any graph node")
-        # only seed rows carry a teleport entry; non-seeds read as 0 via
-        # the left join + coalesce in the init/update below
-        tele = matched.select("node", F.lit(1.0 / ns).alias("_t"))
-
-    if n == 0:
-        out = nodes.select("node", F.lit(0.0).alias("rank")).localCheckpoint()
-        nodes.unpersist()
-        return out
-
-    outdeg = e.groupBy("src").agg(F.sum("_w").alias("_deg"))
-    # One persisted, src-partitioned copy of (src, dst, _w, _deg): every
-    # iteration reads these cached partitions; only ranks shuffle per round.
-    ewd = e.join(outdeg, on="src").repartition(parts, "src").persist()
-    ewd.count()
-    # WHICH nodes dangle is loop-invariant (only their rank mass changes):
-    # materialize the node-sized dangling set once instead of re-running
-    # the edge-sized out-degree aggregation + anti-join every iteration.
-    dangling = nodes.join(
-        outdeg, on=nodes["node"] == outdeg["src"], how="left_anti"
-    ).localCheckpoint()
-
-    if tele is None:
-        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
-    else:
-        ranks = (
-            nodes.join(tele, on="node", how="left")
-            .select("node", F.coalesce("_t", F.lit(0.0)).alias("rank"))
-            .localCheckpoint()
+    def step(st: DataFrame, scalars: dict) -> DataFrame:
+        contrib = e.join(st, on=e["src"] == st["node"]).select(
+            F.col("dst").alias("node"),
+            (F.col("rank") * F.col("_w") / F.col("_deg")).alias("_in"),
+            F.lit(None).cast("double").alias("_deg"),
+            F.lit(None).cast("boolean").alias("_s"),
         )
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        # dangling mass rides as a one-row broadcast frame cross-joined
-        # into the update — NOT a driver-side .first(): a blocking scalar
-        # collect per iteration serializes the loop on driver round-trips.
-        # One job per iteration (the checkpoint) executes everything.
-        dang_df = (
-            ranks.join(dangling, on="node", how="left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
+        carried = st.select("node", F.lit(0.0).alias("_in"), "_deg", "_s")
+        summed = (
+            contrib.union(carried)
+            .groupBy("node")
+            .agg(F.sum("_in").alias("_in"), F.max("_deg").alias("_deg"), F.max("_s").alias("_s"))
         )
-        contrib = (
-            ewd.join(ranks, on=ewd["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("_w") / F.col("_deg")).alias("_in"))
+        rank = (F.lit(1.0) - F.lit(damping)) * t + F.lit(damping) * (
+            F.col("_in") + F.lit(scalars["dangling"]) * t
         )
-        updated = nodes.join(
-            contrib, on=nodes["node"] == contrib["dst"], how="left"
-        ).crossJoin(F.broadcast(dang_df))
-        if tele is None:
-            rank_expr = F.lit(base) + F.lit(damping) * (
-                F.coalesce(F.col("_in"), F.lit(0.0))
-                + F.col("_dang") / F.lit(float(n))
-            )
-        else:
-            updated = updated.join(tele, on="node", how="left")
-            t = F.coalesce(F.col("_t"), F.lit(0.0))
-            rank_expr = (F.lit(1.0) - F.lit(damping)) * t + F.lit(damping) * (
-                F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dang") * t
-            )
-        ranks = updated.select("node", rank_expr.alias("rank")).localCheckpoint()
-    out = ranks
+        return summed.select("node", "_deg", "_s", rank.alias("rank"))
+
+    loop = iterate(
+        "pagerank",
+        nodes.select("node", "_deg", "_s", t.alias("rank")),
+        step,
+        steps=iterations,
+        scalars={"dangling": counts["ns_dangling"] / counts["ns"]},
+        metrics={"dangling": F.coalesce(F.sum(F.when(dangles, F.col("rank"))), F.lit(0.0))},
+        exact=True,
+    )
+    rank = F.col("rank")
     if round_to is not None:
-        out = ranks.select("node", stable_round(F.col("rank"), round_to).alias("rank"))
-        out = out.localCheckpoint()
-    nodes.unpersist()
-    ewd.unpersist()
-    return out
+        rank = stable_round(rank, round_to)
+    return loop.frame.select("node", rank.alias("rank"))
 
 
 def personalized_pagerank(

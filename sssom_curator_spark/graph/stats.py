@@ -13,7 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark import log
 from sssom_curator_spark.graph._edges import symmetric_adjacency, undirected_edges
+from sssom_curator_spark.graph._iterate import checkpoint, iterate
 
 __all__ = ["degree_assortativity", "degree_histogram", "k_core"]
 
@@ -66,31 +68,31 @@ def k_core(
 
     Scale shape per round: one degree aggregation (map-side partials)
     over the shrinking edge frame, one node-sized keep set, two semi-joins
-    to restrict edges — all keyed on node ids; ``localCheckpoint`` per
-    round; convergence = edge count unchanged (peeling is monotone, so
-    the count alone is a sound fixpoint test — no checksum needed).
+    to restrict edges — all keyed on node ids. The rounds run in
+    :func:`sssom_curator_spark.graph._iterate.iterate`: each round's edge
+    count is observed on its checkpoint job, and an unchanged count ends
+    the loop (peeling is monotone, so the count alone is a sound fixpoint
+    test — no checksum needed).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    cur = undirected_edges(edges, src, dst)
-    n_edges = cur.count()
-    for _ in range(max_iterations):
-        deg = symmetric_adjacency(cur).groupBy("n").agg(
-            F.count(F.lit(1)).alias("d")
+
+    def peel(cur: DataFrame, _scalars: dict) -> DataFrame:
+        deg = symmetric_adjacency(cur).groupBy("n").agg(F.count(F.lit(1)).alias("d"))
+        keep = deg.filter(F.col("d") >= k).select(F.col("n").alias("node"))
+        return cur.join(keep, on=cur["u"] == keep["node"], how="left_semi").join(
+            keep, on=cur["v"] == keep["node"], how="left_semi"
         )
-        keep = deg.filter(F.col("d") >= k).select(F.col("n").alias("node")).localCheckpoint()
-        nxt = (
-            cur.join(keep, on=cur["u"] == keep["node"], how="left_semi")
-            .join(keep, on=cur["v"] == keep["node"], how="left_semi")
-            .localCheckpoint()
-        )
-        n_next = nxt.count()
-        cur = nxt
-        if n_next == n_edges:
-            break
-        n_edges = n_next
+
+    metrics = {"m": F.count(F.lit(1))}
+    cur, scalars = checkpoint(undirected_edges(edges, src, dst), metrics)
+    loop = iterate(
+        "k_core", cur, peel, steps=max_iterations, scalars=scalars, metrics=metrics, converge=True
+    )
+    if not loop.converged:
+        log.warning("k_core: %d rounds did not converge", max_iterations)
     return (
-        symmetric_adjacency(cur)
+        symmetric_adjacency(loop.frame)
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("core_degree"))
         .select(F.col("n").alias("node"), "core_degree")

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 if TYPE_CHECKING:  # annotation-only: the opt-in cache level for ngram_jaccard_pairs
     from pyspark import StorageLevel
 
+from sssom_curator_spark import log
 from sssom_curator_spark.functions.text_norm import norm_text_col
 from sssom_curator_spark.operators.textstats import stable_round
 
@@ -319,9 +320,7 @@ def ngram_jaccard_pairs(
         hot = dfreq.filter(F.col("_df") > max_shingle_df)
         n_hot = hot.count()
         if n_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "ngram_jaccard_pairs: dropping %d shingles with document "
                 "frequency > %d from the candidate join (scores for pairs "
                 "sharing them are lower bounds)",

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sssom_curator_spark import log
 from sssom_curator_spark.functions.aho_corasick import AhoCorasick
 from sssom_curator_spark.functions.scoring import score_match_batch
 from sssom_curator_spark.functions.text_norm import norm_text_col, normalize_text
@@ -336,9 +337,7 @@ def comention_edges(
         hot = sizes.filter(F.col("_k") > max_entities_per_doc).select("_doc")
         n_hot = hot.count()
         if n_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "comention_edges: dropping %d documents with more than %d "
                 "distinct entities from pair induction (catalog pages "
                 "would contribute O(k^2) pairs each)",

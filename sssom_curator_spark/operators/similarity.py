@@ -425,14 +425,16 @@ def cosine_near_duplicates(
     :mod:`sssom_curator_spark.operators.dedup`).
 
     Candidates come from the same md5-seeded random-hyperplane banding as
-    :func:`cosine_topk_lsh` (self-join on (band, key) — per-bucket sized,
-    never n²); candidates rerank with the exact JVM cosine and the cutoff
-    applies to the exact score. Recall is tunable via (n_planes, bands);
-    near-duplicates (cosine → 1) collide in every band by construction.
-
-    Same scale shape as :func:`cosine_topk_lsh`: Arrow-batch signatures
-    (plan size O(1) in dim), id-pair-only candidate distinct, vectors
-    re-attached by joining back to the embedding frame.
+    :func:`cosine_topk_lsh`: one Arrow-batch signature pass (plan size
+    O(1) in dim), then one ``applyInPandas`` per (band, key) bucket that
+    receives the bucket's (id, vector) rows — the only shuffle — and
+    scores every in-bucket pair there (a matmul pre-filter, then an exact
+    sequential rescore), returning only pairs near the cutoff. No
+    candidate pair crosses an exchange and no vector is re-attached by a
+    join. The authoritative ``round(cosine, 4) >= cutoff`` filter and the
+    cross-band dedup run in the JVM. Recall is tunable via (n_planes,
+    bands); near-duplicates (cosine → 1) collide in every band by
+    construction.
     """
     # Plan shape (r06 rewrite — guide §2.3/§4.2): the old form
     # materialized the FULL candidate id-pair space through a JVM

@@ -69,21 +69,6 @@ def check_redundancy(repo: DataFrame) -> DataFrame:
     return redundancy_report(frames)
 
 
-def check_canonical_sortedness(repo_tsv_rows: list[dict]) -> list[tuple]:
-    """testing.py:161-195: serialized files must be canonically sorted.
-    Driver-side over already-serialized rows (file order is a file
-    property, not a DataFrame one)."""
-    keys = [
-        (
-            r.get("subject_id") or "",
-            r.get("predicate_id") or "",
-            r.get("object_id") or "",
-        )
-        for r in repo_tsv_rows
-    ]
-    return [(a, b) for a, b in zip(keys, keys[1:]) if a > b]
-
-
 def run_integrity_suite(repo: DataFrame, prefix_map: dict[str, str]) -> dict[str, int]:
     """Run all distributed checks; returns violation counts per check."""
     checks = {

@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import logging
+import os
 import random
+import re
 from collections import defaultdict
+
+import pandas as pd
 
 from sssom_curator_spark.graph.components import canonicalize_mappings, connected_components
 from sssom_curator_spark.sources.fixtures import seed_repository
+
+SF001 = os.path.join(os.path.dirname(__file__), "..", "perfbench", "data", "sf0.01")
 
 
 def _union_find_oracle(edges):
@@ -79,6 +86,105 @@ class TestConnectedComponents:
             for r in connected_components(df, small_graph_threshold=0).collect()
         }
         assert got == {"c000"}
+
+
+class TestDistributedRounds:
+    """With partition coalescing off, the contraction sees the edges in
+    several partitions, so the star rounds have real merging to do."""
+
+    @staticmethod
+    def _uncoalesced(spark, fn):
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            return fn()
+        finally:
+            spark.conf.set(key, old)
+
+    def test_random_graph_and_chain_match_union_find(self, spark, caplog):
+        rng = random.Random(3)
+        edges = [(f"n{rng.randrange(300)}", f"n{rng.randrange(300)}") for _ in range(260)]
+        edges += [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(120)]
+        df = spark.createDataFrame(edges, "src string, dst string")
+        with caplog.at_level(logging.INFO, logger="sssom_curator_spark"):
+            got = self._uncoalesced(
+                spark, lambda: connected_components(df, small_graph_threshold=0).collect()
+            )
+        assert len(got) == len({r["node"] for r in got})
+        assert {r["node"]: r["component"] for r in got} == _union_find_oracle(edges)
+        rounds = [
+            r.args[1] for r in caplog.records if r.args and r.args[0] == "connected_components"
+        ]
+        assert rounds and rounds[0] >= 2
+
+    def test_unconverged_still_one_row_per_node(self, spark, caplog):
+        edges = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(120)]
+        df = spark.createDataFrame(edges, "src string, dst string")
+        with caplog.at_level(logging.WARNING, logger="sssom_curator_spark"):
+            got = self._uncoalesced(
+                spark,
+                lambda: connected_components(
+                    df, small_graph_threshold=0, max_iterations=1
+                ).collect(),
+            )
+        assert "did not converge" in caplog.text
+        assert sorted(r["node"] for r in got) == sorted({n for e in edges for n in e})
+
+
+class TestLoggedPath:
+    def test_small_path_logged(self, spark, caplog):
+        df = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+        with caplog.at_level(logging.INFO, logger="sssom_curator_spark"):
+            connected_components(df).collect()
+        assert "connected_components: small path, 2 edges on the driver" in caplog.text
+        assert "distributed path" not in caplog.text
+
+    def test_distributed_path_logged(self, spark, caplog):
+        df = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+        with caplog.at_level(logging.INFO, logger="sssom_curator_spark"):
+            got = connected_components(df, small_graph_threshold=0).collect()
+        assert {r["component"] for r in got} == {"a"}
+        assert "connected_components: distributed path" in caplog.text
+        assert re.search(r"connected_components: \d+ steps, \d+ checkpoints, converged", caplog.text)
+        assert "did not converge" not in caplog.text
+
+
+class TestSessionHistory:
+    """CC and canonicalize give the same rows, equal to union-find, before
+    and after other queries ran in the same session, in either order."""
+
+    @staticmethod
+    def _oracle():
+        li = pd.read_parquet(
+            os.path.join(SF001, "lineitem.parquet"), columns=["l_orderkey", "l_partkey"]
+        )
+        li = li[li["l_orderkey"] < 400]
+        edges = sorted(
+            {(f"a{o % 97}", f"b{p % 101}") for o, p in zip(li["l_orderkey"], li["l_partkey"])}
+        )
+        rep = _union_find_oracle(edges)
+        return (
+            sorted(rep.items()),
+            sorted((a, b, rep[a], rep[b]) for a, b in edges),
+        )
+
+    def test_cc_and_canonicalize_independent_of_history(self, spark):
+        import __spark_entry__ as entry
+
+        q = entry.queries()
+
+        def run(name):
+            return sorted(tuple(r) for r in q[name](spark, SF001).collect())
+
+        first = {name: run(name) for name in ("connected_components", "canonicalize")}
+        for other in ("pagerank", "funnel"):
+            q[other](spark, SF001).collect()
+        second = {name: run(name) for name in ("canonicalize", "connected_components")}
+        components, canonical = self._oracle()
+        assert first == second
+        assert first["connected_components"] == components
+        assert first["canonicalize"] == canonical
 
 
 class TestCanonicalization:

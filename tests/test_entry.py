@@ -4,6 +4,8 @@ tools/check_oracle.py and the driver's own verify)."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
@@ -49,3 +51,16 @@ class TestContract:
             df = qs[name](spark, SF)
             assert df.columns, name
             df.limit(5).collect()
+
+    def test_queries_leave_session_conf_unchanged(self, spark):
+        """Queries that narrow the shuffle width restore the session's."""
+        qs = entrymod.queries()
+        key = "spark.sql.shuffle.partitions"
+        before = spark.conf.get(key)
+        for name in ("kg_pipeline", "kg_evidence_boost"):
+            assert qs[name](spark, SF).count() > 0, name
+            assert spark.conf.get(key) == before, name
+        with pytest.raises(RuntimeError):
+            with entrymod._shuffle_partitions(spark, 3):
+                raise RuntimeError("query failed")
+        assert spark.conf.get(key) == before

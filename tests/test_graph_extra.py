@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import random
 
 import pytest
@@ -547,6 +548,16 @@ class TestKCore:
         for k in (2, 3):
             got = {r["node"]: r["core_degree"] for r in k_core(df, k).collect()}
             assert got == self._oracle(edges, k), k
+
+    def test_fixpoint_input_converges_in_one_round(self, spark, caplog):
+        from sssom_curator_spark.graph.stats import k_core
+
+        df = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+        with caplog.at_level(logging.INFO, logger="sssom_curator_spark"):
+            got = {r["node"]: r["core_degree"] for r in k_core(df, 1, max_iterations=1).collect()}
+        assert got == {"a": 1, "b": 2, "c": 1}
+        assert "k_core: 1 steps, 1 checkpoints, converged" in caplog.text
+        assert "did not converge" not in caplog.text
 
 
 class TestDegreeAssortativity:

@@ -205,10 +205,10 @@ class TestRound5MapSideOps:
 
 class TestPageRankEdgeReuse:
     def test_edges_cached_not_rescanned(self, spark):
-        """Each PageRank iteration must read the persisted src-partitioned
-        edge frame (InMemoryTableScan), not recompute the edge derivation:
-        the design contract that per-iteration shuffles carry only the
-        two-column rank frame."""
+        """Each PageRank iteration must read the checkpointed edge frame,
+        not recompute the edge derivation, and the only blocks left behind
+        are checkpoints: the edge frame, the node state and one rank frame
+        per iteration (iterations + 2), never a leaked persist."""
         from sssom_curator_spark.graph.pagerank import pagerank
 
         li = _table(spark, "lineitem")
@@ -219,16 +219,10 @@ class TestPageRankEdgeReuse:
         before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
         ranks = pagerank(edges, iterations=2, round_to=None)
         assert ranks.count() > 0
-        # pagerank persists nodes + the src-partitioned edge frame
-        # internally and MUST release both on exit (a leaked EDGE-scale
-        # cache accumulates across pipeline stages). What may remain are
-        # only the localCheckpoint blocks — the edge projection, the
-        # dangling-node set, the initial/per-iteration/final rank frames
-        # (all edge- or node-sized, at most iterations + 4), reclaimed by
-        # the ContextCleaner when their Datasets drop (the same convention
-        # as connected_components' per-round checkpoints).
+        # checkpoint blocks are reclaimed by the ContextCleaner when their
+        # Datasets drop, like connected_components' per-round checkpoints
         after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-        assert after - before <= 2 + 4  # iterations + 4, never the 2 persists
+        assert after - before <= 2 + 2  # iterations + 2
 
 
 class TestScanFanOut:

@@ -5,11 +5,17 @@ Runs every ``queries()`` entry at sf0.01 and compares against
 order-insensitive value multiset (values normalized: floats rounded to 9
 dp, everything else stringified). Usage::
 
-    python tools/check_oracle.py [query ...]
+    python tools/check_oracle.py [query ...] [--json PATH]
+
+Spark runs on ``local[$SPARK_GRAFT_CPUS]``, or on every CPU when that is
+unset. Exits non-zero on any failure, on an unknown query name, and when
+no query ran.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 import time
 from collections import Counter
@@ -50,19 +56,25 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    json_out = None
-    argv = [a for a in sys.argv[1:] if not a.startswith("--json")]
-    for a in sys.argv[1:]:
-        if a.startswith("--json="):
-            json_out = a.split("=", 1)[1]
-    spark = get_spark(master="local[8]")
+    parser = argparse.ArgumentParser(description="Compare entry queries with their DuckDB oracles.")
+    parser.add_argument("queries", nargs="*", help="query names (default: all)")
+    parser.add_argument("--json", metavar="PATH", help="write the per-query report here")
+    args = parser.parse_args()
+    json_out = args.json
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    only = set(args.queries)
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark(master=f"local[{cpus}]")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    only = set(argv)
     failures = []
     report: dict[str, dict] = {}
     for name, fn in qs.items():
@@ -135,6 +147,9 @@ def main() -> int:
                 indent=1,
             )
     spark.stop()
+    if not report:
+        print("no query ran")
+        return 1
     return 1 if failures else 0
 
 
