@@ -19,6 +19,7 @@ row-count / schema / value-hash comparison is exact:
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 from collections.abc import Callable
 
@@ -26,58 +27,27 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
-#: sweep hook: force the _t fan-out on (True) / off (False) regardless of
-#: the per-call default — used by tools/sweep_fanout.py only
-_FAN_OUT_OVERRIDE: bool | None = None
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A testdata table, read as written: no repartition here. The
+    map-heavy operators spread their own input (see
+    ``sssom_curator_spark.fan_out``); shuffle-first queries gain nothing
+    from an extra exchange in front of their first one.
 
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = True
-) -> DataFrame:
+    Parquet schema inference runs a one-task job per read, so the schema
+    of each table is inferred once per session and reused after that.
+    The session time zone is pinned to UTC for sessions built elsewhere,
+    so timestamp semantics match the DuckDB oracle."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if _FAN_OUT_OVERRIDE is not None:
-        fan_out = _FAN_OUT_OVERRIDE
-    if not fan_out:
-        return df
-    # Scale-adaptive scan fan-out (guide §2.4/§6.1): the testdata parquet
-    # files are written as 1-6 row groups and a parquet scan cannot split
-    # below row-group granularity, so every per-row-heavy operator
-    # (shingling, md5 minhash, URL parsing, regex gates, signature UDFs)
-    # was bottlenecked on 1-6 scan tasks while the rest of the cluster
-    # idled. When the scan yields fewer splits than the cluster's default
-    # parallelism, fan the rows out once with a HASH repartition on the
-    # table's unique key (a few-MB exchange here; filters/projections
-    # still push through the Exchange to the scan — plan-asserted in
-    # tests/test_plans.py). Hash-on-key rather than round-robin: unique
-    # keys spread evenly, rows stay deterministically placed under task
-    # retry, and there is no sort-before-repartition pass (guide §2.5) —
-    # measured faster than round-robin on both map-heavy and
-    # shuffle-first queries. Inputs that already provide >=
-    # defaultParallelism splits (any real 100 TB table) skip it: no
-    # blanket corpus shuffle at scale.
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        keys = _TABLE_KEYS.get(name)
-        df = df.repartition(par, *keys) if keys else df.repartition(par)
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+    return spark.read.schema(_schema(spark, path)).parquet(path)
 
 
-#: unique key per testdata table — the fan-out hash key in _t
-_TABLE_KEYS: dict[str, list[str]] = {
-    "region": ["r_regionkey"],
-    "nation": ["n_nationkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "orders": ["o_orderkey"],
-    "lineitem": ["l_orderkey", "l_linenumber"],
-    "events": ["event_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-}
+@functools.cache
+def _schema(spark: SparkSession, path: str) -> StructType:
+    return spark.read.parquet(path).schema
 
 
 def _dec_sum(col: str, alias: str) -> F.Column:
@@ -143,7 +113,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def q_prefix_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: order-insensitive pair counter (export/summary.py:72-80)."""
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     return (
         li.groupBy(
             F.least("l_returnflag", "l_linestatus").alias("source_key"),
@@ -193,8 +163,8 @@ def q_state_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grounding_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 shape: probe side joined against a broadcast dimension
     (predict/lexical.py:256-310 → broadcast hash join)."""
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
-    part = _t(spark, sf_dir, "part", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
         .groupBy("p_name")
@@ -287,7 +257,7 @@ def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 stable pagination idiom: row_number window (SURVEY.md §2.5)."""
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     return (
         ev.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -299,7 +269,7 @@ def q_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-shaped tumbling window aggregation in batch (SURVEY.md
     §2.9); hour keys serialize as UTC strings."""
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
@@ -314,7 +284,7 @@ def q_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the burst/stall monitoring query over the events stream."""
     from sssom_curator_spark.operators.temporal import rate_anomaly
 
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     return rate_anomaly(ev)
 
 
@@ -323,7 +293,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy earliest-completion matching, per-step user-keyed min aggs."""
     from sssom_curator_spark.operators.temporal import funnel_conversion
 
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     return funnel_conversion(ev, ["view", "click", "purchase"])
 
 
@@ -332,7 +302,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-event cohorts, epoch-exact week offsets, per-cohort rates."""
     from sssom_curator_spark.operators.temporal import cohort_retention
 
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     return cohort_retention(ev)
 
 
@@ -341,7 +311,7 @@ def q_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     shorter than the size, so every event lands in size/slide overlapping
     windows (SURVEY.md §2.9; the same expression is streaming-capable).
     The oracle replays the window assignment with epoch arithmetic."""
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.window("ts", "30 minutes", "15 minutes").alias("w"), "event_type"
@@ -361,7 +331,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (export/charts.py:46-66 re-expressed for scale)."""
     from sssom_curator_spark.graph.components import connected_components
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = (
         li.filter(F.col("l_orderkey") < 400)
         .select(
@@ -386,7 +356,7 @@ def q_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = (
         li.filter(F.col("l_orderkey") < 400)
         .select(
@@ -414,7 +384,7 @@ def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup/exact: hash-groupBy with deterministic winner."""
     from sssom_curator_spark.operators.dedup import exact_dedup
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return exact_dedup(docs, ["text"]).select("doc_id", "text")
 
 
@@ -455,7 +425,7 @@ def q_embedding_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pandas UDF (predict/embedding.py:106-161)."""
     from sssom_curator_spark.operators.embedding import embedding_similarity_join
 
-    emb = _t(spark, sf_dir, "embeddings", fan_out=False).select(
+    emb = _t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("string").alias("id"), "embedding"
     )
     src = emb.filter(F.col("id").cast("long") < 50)
@@ -660,9 +630,10 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     malformed variant every 7th row, which must pass through
     trimmed-but-unchanged rather than collide as '<garbage>://' keys)
     and count collapses per canonical form."""
+    from sssom_curator_spark import fan_out
     from sssom_curator_spark.functions.url_ops import canonicalize_url
 
-    o = _t(spark, sf_dir, "orders")
+    o = fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
     k = F.col("o_orderkey")
     base = (
         F.when(k % 3 == 0, F.lit("HTTP://WWW.Shop.COM:80"))
@@ -717,12 +688,15 @@ def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 11th grouping under the '(none)' domain)."""
     import pandas as pd
 
+    from sssom_curator_spark import fan_out
     from sssom_curator_spark.functions.url_ops import (
         domain_stats,
         filter_blocklisted_domains,
     )
 
-    o = _t(spark, sf_dir, "orders")
+    # spread the scan before the blocklist join (past the join, counting
+    # splits would run the join's stages)
+    o = fan_out(_t(spark, sf_dir, "orders"), "o_orderkey")
     k = F.col("o_orderkey")
     url = F.when(k % 11 == 0, F.lit("  site-relative/path?x=1 ")).otherwise(
         F.concat(
@@ -750,7 +724,7 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither); per-document rows pin every assignment, not just counts."""
     from sssom_curator_spark.operators.sampling import split_assign
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select("doc_id")
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
     return split_assign(docs, id_col="doc_id").select("doc_id", "split")
 
 
@@ -760,7 +734,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition dependence; every kept doc_id is pinned."""
     from sssom_curator_spark.operators.sampling import stratified_sample
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select("doc_id", "lang")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     return stratified_sample(
         docs,
         {"en": 0.8, "de": 0.3},
@@ -777,7 +751,7 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     appears only in the upstream size aggregation."""
     from sssom_curator_spark.operators.sampling import mixture_weights
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select("lang", "n_chars")
+    docs = _t(spark, sf_dir, "documents").select("lang", "n_chars")
     stats = docs.groupBy("lang").agg(F.sum("n_chars").alias("n_tokens"))
     return mixture_weights(
         stats, {"en": 0.5, "de": 0.25, "es": 0.25}, group_col="lang"
@@ -791,7 +765,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document."""
     from sssom_curator_spark.operators.sampling import pack_sequences
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select("doc_id", "n_chars")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return pack_sequences(docs, id_col="doc_id", tokens_col="n_chars", budget=4096)
 
 
@@ -800,9 +774,10 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same synthetic email / IPv4 / US-phone strings keyed off doc_id,
     then run the shared Java∩RE2 pattern set — per-kind counts on the raw
     text plus an md5 of the redacted text pin every replacement."""
+    from sssom_curator_spark import fan_out
     from sssom_curator_spark.functions.pii_ops import pii_counts, redact_pii
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     k = F.col("doc_id")
     injected = F.concat(
         F.col("text"),
@@ -848,7 +823,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay follows the identical trajectory."""
     from sssom_curator_spark.operators.clustering import kmeans_assignments
 
-    emb = _t(spark, sf_dir, "embeddings", fan_out=False).select("vec_id", "embedding")
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return kmeans_assignments(emb, k=8, n_iter=2)
 
 
@@ -870,7 +845,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming uses stateful — with the oracle replaying the gaps-and-
     islands form (lag + cumulative new-session sum). Session end is
     last_ts + gap per Spark's semantics."""
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window(F.col("ts"), "30 minutes"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -949,7 +924,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's native ASOF JOIN."""
     from sssom_curator_spark.operators.temporal import asof_join
 
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     left = ev.select("user_id", "ts", "event_id")
     right = ev.filter(F.col("event_type") == "click").select(
         "user_id", "ts", F.col("value").alias("click_value")
@@ -964,7 +939,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain SQL range predicate."""
     from sssom_curator_spark.operators.temporal import range_join
 
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     points = ev.select(
         "event_id",
         (F.unix_timestamp("ts") - F.unix_timestamp(F.lit("2024-01-01 00:00:00")))
@@ -999,7 +974,7 @@ def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the hypertable shape: coarse levels never rescan the corpus)."""
     from sssom_curator_spark.operators.temporal import hypertable_rollup
 
-    ev = _t(spark, sf_dir, "events", fan_out=False)
+    ev = _t(spark, sf_dir, "events")
     out = hypertable_rollup(ev, levels=("hour", "day", "week"))
     return out.select(
         "level",
@@ -1122,7 +1097,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join, and exact rerank."""
     from sssom_curator_spark.operators.similarity import cosine_topk_lsh
 
-    emb = _t(spark, sf_dir, "embeddings", fan_out=False)
+    emb = _t(spark, sf_dir, "embeddings")
     out = cosine_topk_lsh(emb.filter(F.col("vec_id") < 10), emb, k=5, id_col="vec_id")
     return out.select(
         "query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
@@ -1578,7 +1553,7 @@ def q_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-deletion variants."""
     from sssom_curator_spark.operators.grounding import edit_distance_pairs
 
-    part = _t(spark, sf_dir, "part", fan_out=False).filter(F.col("p_partkey") < 200)
+    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 200)
     names = part.select(
         F.col("p_partkey").alias("id"), F.col("p_name").alias("norm_text")
     ).union(
@@ -1663,7 +1638,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 rounds of most-frequent-neighbor-label with min-label tie-break."""
     from sssom_curator_spark.graph.labelprop import label_propagation
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 1500).select(
         F.concat(F.lit("p"), (F.col("l_orderkey") % 40).cast("string")).alias("src"),
         F.concat(F.lit("p"), (F.col("l_partkey") % 40).cast("string")).alias("dst"),
@@ -1677,7 +1652,7 @@ def q_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, hub capping exercised in pytest."""
     from sssom_curator_spark.graph.neighbors import neighbor_jaccard
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 1500).select(
         F.concat(F.lit("p"), (F.col("l_orderkey") % 40).cast("string")).alias("src"),
         F.concat(F.lit("p"), (F.col("l_partkey") % 40).cast("string")).alias("dst"),
@@ -1691,7 +1666,7 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality-sized."""
     from sssom_curator_spark.operators.sketches import exact_quantiles
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False)
+    docs = _t(spark, sf_dir, "documents")
     return exact_quantiles(docs, "n_chars", [0.05, 0.25, 0.5, 0.75, 0.95, 0.99])
 
 
@@ -1702,7 +1677,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sssom_curator_spark.graph.pagerank import personalized_pagerank
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 3000).select(
         F.concat(F.lit("p"), (F.col("l_orderkey") % 60).cast("string")).alias("src"),
         F.concat(F.lit("p"), (F.col("l_partkey") % 60).cast("string")).alias("dst"),
@@ -1718,7 +1693,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained half-step + L2-normalization CTE oracle."""
     from sssom_curator_spark.graph.hits import hits
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 3000).select(
         F.concat(F.lit("p"), (F.col("l_orderkey") % 60).cast("string")).alias("src"),
         F.concat(F.lit("p"), (F.col("l_partkey") % 60).cast("string")).alias("dst"),
@@ -1731,7 +1706,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (graph/stats.py): one-row Pearson correlation of edge-end degrees."""
     from sssom_curator_spark.graph.stats import degree_assortativity
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     dense = li.filter(F.col("l_orderkey") < 800).select(
         F.concat(F.lit("d"), (F.col("l_orderkey") % 15).cast("string")).alias("src"),
         F.concat(F.lit("d"), (F.col("l_partkey") % 15).cast("string")).alias("dst"),
@@ -1748,7 +1723,7 @@ def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a fixpoint vs a fixed-round CTE oracle."""
     from sssom_curator_spark.graph.stats import k_core
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     dense = li.filter(F.col("l_orderkey") < 800).select(
         F.concat(F.lit("d"), (F.col("l_orderkey") % 15).cast("string")).alias("src"),
         F.concat(F.lit("d"), (F.col("l_partkey") % 15).cast("string")).alias("dst"),
@@ -1766,7 +1741,7 @@ def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-flight report for join-strategy decisions."""
     from sssom_curator_spark.graph.stats import degree_histogram
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 1500).select(
         F.concat(F.lit("p"), (F.col("l_orderkey") % 40).cast("string")).alias("src"),
         F.concat(F.lit("p"), (F.col("l_partkey") % 40).cast("string")).alias("dst"),
@@ -1780,7 +1755,7 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hubs; oracle is the independent canonical-edge 3-way join."""
     from sssom_curator_spark.graph.triangles import triangle_counts
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 3000).select(
         F.concat(F.lit("p"), (F.col("l_orderkey") % 60).cast("string")).alias("src"),
         F.concat(F.lit("p"), (F.col("l_partkey") % 60).cast("string")).alias("dst"),
@@ -1794,7 +1769,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected by salted-hash uniforms — deterministic across engines."""
     from sssom_curator_spark.operators.sampling import weighted_sample
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select("doc_id", "n_chars")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return weighted_sample(docs, 25, weight_col="n_chars")
 
 
@@ -1803,7 +1778,7 @@ def q_group_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smallest k salted hashes per group, partition-invariant."""
     from sssom_curator_spark.operators.sampling import group_topk_sample
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id", (F.col("doc_id") % 7).alias("grp")
     )
     return group_topk_sample(docs, group_cols=["grp"], id_col="doc_id", k=3)
@@ -1816,7 +1791,7 @@ def q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a delta-sized added/removed/changed table."""
     from sssom_curator_spark.functions.url_ops import crawl_diff
 
-    docs = _t(spark, sf_dir, "documents", fan_out=False).select("doc_id", "text")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     d = F.col("doc_id")
     url = F.concat(
         F.lit("http://crawl"), (d % 19).cast("string"), F.lit(".site/p/"), d.cast("string")
@@ -1973,7 +1948,7 @@ def q_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ontology-hierarchy (skos:broader) ancestor-expansion operator."""
     from sssom_curator_spark.graph.closure import transitive_closure
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 2000).select(
         F.concat(F.lit("n"), (F.col("l_orderkey") % 80).cast("string")).alias("src"),
         F.concat(
@@ -1990,7 +1965,7 @@ def q_bounded_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sssom_curator_spark.graph.closure import bounded_reachability
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 2000).select(
         F.concat(F.lit("n"), (F.col("l_orderkey") % 80).cast("string")).alias("src"),
         F.concat(
@@ -2007,7 +1982,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration — deterministic, so the hash comparison is exact at 6 dp."""
     from sssom_curator_spark.graph.pagerank import pagerank
 
-    li = _t(spark, sf_dir, "lineitem", fan_out=False)
+    li = _t(spark, sf_dir, "lineitem")
     edges = li.filter(F.col("l_orderkey") < 3000).select(
         F.concat(F.lit("p"), (F.col("l_orderkey") % 60).cast("string")).alias("src"),
         F.concat(F.lit("p"), (F.col("l_partkey") % 60).cast("string")).alias("dst"),

@@ -26,6 +26,10 @@ in vectorized (Arrow-batched) pandas UDFs.
 """
 
 import logging
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 __version__ = "0.1.0"
 
@@ -33,3 +37,32 @@ __version__ = "0.1.0"
 #: how many rounds a loop ran) are recorded here; logging never starts a
 #: Spark job.
 log = logging.getLogger("sssom_curator_spark")
+
+
+def fan_out(df: "DataFrame", *keys: str) -> "DataFrame":
+    """Spread ``df`` over the cluster's default parallelism before a
+    per-row-heavy transform, when its scan gives fewer splits than that.
+
+    A parquet scan cannot split below one row group, so a small table
+    written as one row group reads as one task; shingling, md5 hashing,
+    URL parsing and regex gates composed on it then run on that task
+    while the other cores idle. Below ``defaultParallelism`` splits this
+    hash-repartitions on ``keys`` (the operator's id column when it has
+    one, else its text or URL column): ids spread evenly, and rows stay
+    placed deterministically under task retry. At ``defaultParallelism``
+    splits or more, which any table large enough to matter has, ``df`` is
+    returned unchanged, so there is no corpus-wide shuffle at scale.
+
+    Map-heavy operators call it once on their own input, and so do
+    queries that compose a column function on theirs. Call it before any
+    join or aggregation: reading the split count of a frame that holds an
+    exchange makes adaptive execution run the stages below it, while a
+    scan-rooted narrow frame or a persisted one costs no job.
+    """
+    par = df.sparkSession.sparkContext.defaultParallelism
+    splits = df.rdd.getNumPartitions()
+    if splits >= par:
+        log.debug("fan_out: kept %d splits", splits)
+        return df
+    log.debug("fan_out: fanned out to %d", par)
+    return df.repartition(par, *keys)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark import fan_out
+
 __all__ = [
     "canonicalize_url",
     "url_dedup",
@@ -301,7 +303,7 @@ def crawl_merge(
     work is proportional to the NEW crawl. Frames with map-typed columns
     take the same hashed-winner fallback as :func:`url_dedup`.
     """
-    all_rows = snapshots.unionByName(fresh)
+    all_rows = fan_out(snapshots.unionByName(fresh), url_col)
     cols = all_rows.columns
     tagged = all_rows.withColumn("_curl", canonicalize_url(url_col))
     no_maps = [f.name for f in all_rows.schema.fields if not _contains_map(f.dataType)]

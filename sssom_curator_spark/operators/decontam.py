@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark import fan_out
+
 # shared tokenizer: the DuckDB oracles replay this exact rule for both
 # this module and repetition_stats — one definition only
 from sssom_curator_spark.operators.textstats import norm_words as _words
@@ -99,6 +101,7 @@ def decontaminate(
     if bench_grams is None:
         bench_grams = benchmark_ngrams(benchmark, text_col=bench_text_col, n=n)
     bench = F.broadcast(bench_grams)
+    docs = fan_out(docs, id_col)
     contaminated = (
         text_ngrams(docs, id_col=id_col, text_col=text_col, n=n)
         .join(bench, on="gram_hash", how="left_semi")

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 if TYPE_CHECKING:  # annotation-only: the opt-in cache level for ngram_jaccard_pairs
     from pyspark import StorageLevel
 
-from sssom_curator_spark import log
+from sssom_curator_spark import fan_out, log
 from sssom_curator_spark.functions.text_norm import norm_text_col
 from sssom_curator_spark.operators.textstats import stable_round
 
@@ -181,6 +181,7 @@ def minhash_near_duplicates(
     # directly — the k minima combine map-side (partial agg) and the ONLY
     # shuffle of the signature stage carries 16 hex minima per document,
     # never the shingle text stream.
+    df = fan_out(df, id_col)
     sh = shingles(df, id_col=id_col, text_col=text_col, n=shingle_n, distinct=False)
     # Eagerly materialize ONLY the signature (k small columns per doc):
     # the banded frame below feeds BOTH sides of the candidate self-join,
@@ -310,7 +311,7 @@ def ngram_jaccard_pairs(
     of capped shingles is logged — no silent truncation. ``None`` (default)
     disables the cap: the exact-verification mode the oracle checks.
     """
-    sh = shingles(df, id_col=id_col, text_col=text_col, n=shingle_n)
+    sh = shingles(fan_out(df, id_col), id_col=id_col, text_col=text_col, n=shingle_n)
     if persist_shingles is not None:
         sh = sh.persist(persist_shingles)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -458,7 +459,7 @@ def simhash(
     # here (and in the DuckDB oracle, which stays mutually consistent) is
     # ASCII-only while Python str.split() also breaks on Unicode
     # whitespace (NBSP, \x85, …) — signatures can differ on such docs.
-    toks = df.select(
+    toks = fan_out(df, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.explode_outer(
             F.array_distinct(
@@ -617,6 +618,7 @@ def drop_repeated_paragraphs(
     """
     import re as _re
 
+    docs = fan_out(docs, id_col)
     paras = docs.select(
         F.col(id_col).alias("_pid"),
         F.posexplode(
@@ -681,7 +683,9 @@ def dup_span_stats(
     a genuinely hot key there — AQE's skew-join split handles it, and the
     dimension side carries only duplicated hashes (one column).
     """
-    arrs = shingle_arrays(df, id_col=id_col, text_col=text_col, n=window_tokens)
+    arrs = shingle_arrays(
+        fan_out(df, id_col), id_col=id_col, text_col=text_col, n=window_tokens
+    )
     stream = arrs.select(
         "doc_id",
         # NULL text → NULL array; clamp to 0 (and -1 under legacy size())

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sssom_curator_spark import log
+from sssom_curator_spark import fan_out, log
 from sssom_curator_spark.functions.aho_corasick import AhoCorasick
 from sssom_curator_spark.functions.scoring import score_match_batch
 from sssom_curator_spark.functions.text_norm import norm_text_col, normalize_text
@@ -266,7 +266,7 @@ def mention_candidates_ngram(
     cross-check the Aho–Corasick path and as the skew-salting benchmark
     subject. Output: one row per (doc, position, matched entity).
     """
-    tokens = docs.select(
+    tokens = fan_out(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.split(norm_text_col(text_col), " ").alias("toks"),
     )

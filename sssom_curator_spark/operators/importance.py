@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sssom_curator_spark import fan_out
 from sssom_curator_spark.operators.decontam import text_ngrams
 
 __all__ = ["dsir_weights"]
@@ -59,6 +60,8 @@ def dsir_weights(
     n_buckets = 16 ** prefix_chars
     bucket = F.substring(F.col("gram_hash"), 1, prefix_chars).alias("bucket")
 
+    corpus = fan_out(corpus, id_col)
+    target = fan_out(target, target_text_col or text_col)
     corpus_grams = text_ngrams(
         corpus, id_col=id_col, text_col=text_col, n=n
     ).select(F.col("doc_id").alias("_doc"), bucket)

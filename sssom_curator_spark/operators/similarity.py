@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sssom_curator_spark import fan_out
+
 __all__ = [
     "cosine_sim_col",
     "cosine_topk_exact",
@@ -65,8 +67,13 @@ def cosine_topk_exact(
     neighbor id for full determinism. The crossJoin is explicit and
     intentional (the exact baseline); the LSH variant is the scale path.
     """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
+    # either side may be the streamed one of the nested-loop join
+    q = fan_out(queries, id_col).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+    )
+    c = fan_out(corpus, id_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+    )
     scored = (
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))

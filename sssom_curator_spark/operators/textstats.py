@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sssom_curator_spark import fan_out
+
 #: Epsilon added before rounding: ratios of small integers frequently land
 #: exactly on a half-boundary (e.g. 0.48425), where Spark (exact-binary
 #: HALF_UP) and other engines (shortest-repr rounding) disagree. A +1e-9
@@ -151,7 +153,7 @@ def langid_heuristic(df: DataFrame, *, text_col: str = "text") -> DataFrame:
         score = F.when(n > 0, hits / n).otherwise(F.lit(0.0))
         scores.append(F.struct(score.alias("score"), F.lit(lang).alias("lang")))
     best = F.array_max(F.array(*scores))
-    return df.withColumns(
+    return fan_out(df, text_col).withColumns(
         {
             "lang_pred": F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")),
             "lang_score": stable_round(best["score"], 4),
@@ -175,7 +177,7 @@ def doc_fingerprint(
     # inside `transform` would re-evaluate the whole-document regex for
     # EVERY gram position (O(doc_len × n_grams) — quadratic in document
     # length); a bound attribute is a constant-time read per element.
-    out = df.withColumn(
+    out = fan_out(df, text_col).withColumn(
         "_fp_norm", F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
     )
     c = F.col("_fp_norm")
@@ -231,7 +233,7 @@ def repetition_stats(
     chars = lambda arr: F.aggregate(  # noqa: E731 — local expression builder
         arr, F.lit(0).cast("long"), lambda s, x: s + F.length(x)
     )
-    base = df.select(
+    base = fan_out(df, id_col).select(
         F.col(id_col).alias("doc_id"),
         # bind the arrays as real columns before reusing them in several
         # expressions (an unbound expression inside aggregate/transform
@@ -324,7 +326,7 @@ def vocab_stats(
     sort. Tokens travel as themselves (bounded by the word rule), so no
     hashing indirection is needed.
     """
-    toks = df.select(
+    toks = fan_out(df, id_col).select(
         F.col(id_col).alias("_doc"),
         F.explode(norm_words(F.col(text_col))).alias("token"),
     )
@@ -523,7 +525,7 @@ def bpe_encode(
         return F.split(s, sep)
 
     toks = F.flatten(F.transform(norm_words(F.col(text_col)), encode_word))
-    return df.withColumns({out_col: toks, "n_bpe_tokens": F.size(toks)})
+    return fan_out(df, text_col).withColumns({out_col: toks, "n_bpe_tokens": F.size(toks)})
 
 
 def tfidf_topk(
@@ -559,6 +561,7 @@ def tfidf_topk(
 
     from pyspark.sql import Window
 
+    df = fan_out(df, id_col)
     n_docs = df.count()
 
     def tf_frame() -> DataFrame:
@@ -629,6 +632,7 @@ def unigram_logprob_score(
     take ``ln`` of identical doubles and 6-dp rounding absorbs the
     remaining libm ulps.
     """
+    df = fan_out(df, id_col)
     toks = df.select(
         F.col(id_col).alias("_doc"),
         F.explode(norm_words(F.col(text_col))).alias("token"),
@@ -683,15 +687,17 @@ def bigram_pmi(
     dropped (PMI is notoriously noisy on rare pairs). Output:
     ``(w1, w2, c, pmi)``, 6 dp. Tokenizes with :func:`norm_words`.
 
-    Scale shape: three corpus scans, none cached — the unigram count
-    aggregation (vocab-sized output dim, persisted), a one-scalar
-    non-empty-doc count (the number of adjacent pairs is EXACTLY
-    ``total_tokens − non_empty_docs``, so the bigram total never needs a
-    second aggregation over the pair frame), and the bigram count
-    aggregation (map-side partials collapse repeated pairs before the
-    exchange — the (w1, w2) key space cannot hot-key on a stopword pair).
+    Scale shape: three corpus scans, none cached — one scalar job for
+    the token total and the non-empty-doc count (the number of adjacent
+    pairs is EXACTLY ``total_tokens − non_empty_docs``, so the bigram
+    total never needs a second aggregation over the pair frame), the
+    unigram count aggregation (vocab-sized output dim, persisted), and
+    the bigram count aggregation (map-side partials collapse repeated
+    pairs before the exchange — the (w1, w2) key space cannot hot-key on
+    a stopword pair).
     Probability joins hit the persisted vocab dim (AQE broadcast).
     """
+    df = fan_out(df, id_col)
     toks = norm_words(F.col(text_col))
     uni = (
         df.select(F.explode(toks).alias("w"))
@@ -699,11 +705,15 @@ def bigram_pmi(
         .agg(F.count(F.lit(1)).alias("cw"))
         .persist()
     )
-    t1 = int(uni.agg(F.coalesce(F.sum("cw"), F.lit(0))).first()[0])
-    nonempty = int(
-        df.select(F.size(toks).alias("k")).filter(F.col("k") > 0).count()
-    )
-    t2 = t1 - nonempty
+    # token total and non-empty documents in one job; only positive
+    # sizes count (size(NULL) is -1 with ANSI mode off)
+    k = F.size(toks)
+    row = df.agg(
+        F.coalesce(F.sum(F.when(k > 0, k)), F.lit(0)).alias("t1"),
+        F.count(F.when(k > 0, 1)).alias("nonempty"),
+    ).first()
+    t1 = int(row["t1"])
+    t2 = t1 - int(row["nonempty"])
     if t2 <= 0:
         out = uni.sparkSession.createDataFrame(
             [], "w1 string, w2 string, c bigint, pmi double"

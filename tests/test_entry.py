@@ -64,3 +64,20 @@ class TestContract:
             with entrymod._shuffle_partitions(spark, 3):
                 raise RuntimeError("query failed")
         assert spark.conf.get(key) == before
+
+    def test_repeat_table_read_runs_no_job(self, spark, count_jobs):
+        """``_t`` infers a table's schema once per session; a plain parquet
+        read runs that one-task inference job every time."""
+        path = f"{SF}/orders.parquet"
+        _, plain = count_jobs(lambda: spark.read.parquet(path))
+        assert plain >= 1  # the counter sees the inference job
+        entrymod._t(spark, SF, "orders")
+        tz = "spark.sql.session.timeZone"
+        spark.conf.set(tz, "America/New_York")  # as a session built elsewhere
+        try:
+            df, jobs = count_jobs(lambda: entrymod._t(spark, SF, "orders"))
+            assert spark.conf.get(tz) == "UTC"
+        finally:
+            spark.conf.set(tz, "UTC")
+        assert jobs == 0
+        assert df.schema == spark.read.parquet(path).schema

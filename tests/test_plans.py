@@ -102,12 +102,18 @@ class TestAggregationShapes:
         of documents then spreads across reducers by doc id instead of
         hot-keying one reducer (VERDICT r04 task #8). A single-shuffle
         plan keyed on the hash alone would be invisible at sf0.001 and
-        fatal at corpus scale."""
+        fatal at corpus scale.
+
+        The input has one split per core, as a corpus-scale scan does, so
+        ``fan_out`` leaves it alone. (A fanned-out single-split input is
+        already hash-partitioned by doc id, which satisfies the (hash,
+        doc) grouping without that exchange.)"""
         import re
 
         from sssom_curator_spark.operators.dedup import drop_repeated_paragraphs
 
-        docs = _table(spark, "documents")
+        docs = spark.createDataFrame(_table(spark, "documents").toPandas())
+        assert docs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
         plan = _plan(drop_repeated_paragraphs(docs))
         # partial distinct-dedup exchange keyed on BOTH the md5 grouping
         # expression and the exploded doc id
@@ -142,8 +148,14 @@ class TestCodegenCoverage:
             quality_score,
         )
 
-        docs = _table(spark, "documents")
-        plan = _plan(quality_score(langid_heuristic(docs)))
+        # AQE hides codegen stage markers in unexecuted plans once the
+        # fan-out exchange is there, so inspect with adaptive off
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            docs = _table(spark, "documents")
+            plan = _plan(quality_score(langid_heuristic(docs)))
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
         # executedPlan().toString() marks codegen stages with `*(id)`
         assert "*(" in plan
         # no python evaluation anywhere in the text-analysis path
@@ -225,20 +237,131 @@ class TestPageRankEdgeReuse:
         assert after - before <= 2 + 2  # iterations + 2
 
 
+#: corpus_ops' map-heavy queries carry a fan-out; its shuffle-first and
+#: iterative queries must not (an exchange in front of their first one
+#: measured 20-50% slower at sf0.01)
+MAP_HEAVY = [
+    "minhash_lsh", "domain_stats", "langid_quality",
+    "simhash_neardup", "ngram_jaccard", "url_canonicalize",
+]
+SHUFFLE_FIRST = [
+    "funnel", "hypertable_rollup", "connected_components",
+    "canonicalize", "pagerank", "hits",
+]
+
+
+def _fanned_scans(plan: str) -> list[bool]:
+    """For each parquet scan in ``plan``, whether the first exchange above
+    it is a fan-out: a hash repartition to a fixed partition count."""
+    lines = plan.splitlines()
+    depth = [len(line) - len(line.lstrip(" :+-")) for line in lines]
+    out = []
+    for i, line in enumerate(lines):
+        if "Scan parquet" not in line:
+            continue
+        d, first = depth[i], ""
+        for j in range(i - 1, -1, -1):
+            if depth[j] < d:
+                d = depth[j]
+                if "Exchange" in lines[j]:
+                    first = lines[j]
+                    break
+        out.append("hashpartitioning(" in first and "REPARTITION_BY_NUM" in first)
+    return out
+
+
+def _query_plans(spark, monkeypatch, name: str) -> list[str]:
+    """Plans of a query's result and of every frame it checkpoints or
+    collects on the way (the dedup queries and the graph loops checkpoint
+    their scan-side frames, so the result's plan alone hides the scan)."""
+    import __spark_entry__ as entrymod
+
+    plans = []
+    cls = type(spark.range(0))
+    for method in ("localCheckpoint", "collect"):
+
+        def recording(self, *args, _run=getattr(cls, method), **kwargs):
+            plans.append(_plan(self))
+            return _run(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, method, recording)
+    plans.append(_plan(entrymod.queries()[name](spark, SF_DIR)))
+    return plans
+
+
 class TestScanFanOut:
-    """r06: `__spark_entry__._t` fans single-row-group scans out to
-    cluster parallelism with a hash repartition on the table key. The
-    exchange must not block predicate pushdown or column pruning at the
-    scan."""
+    """``sssom_curator_spark.fan_out`` spreads a single-split scan over
+    the cluster before a map-heavy operator. Its exchange must not block
+    predicate pushdown or column pruning at the scan, it must start no job
+    of its own, and only the map-heavy queries may carry it."""
 
     def test_pushdown_survives_fanout_repartition(self, spark):
-        import __spark_entry__ as entrymod
+        from sssom_curator_spark import fan_out
 
-        li = entrymod._t(spark, SF_DIR, "lineitem")
-        q = li.filter(F.col("l_orderkey") < 400).select("l_orderkey", "l_partkey")
+        li = _table(spark, "lineitem")
+        q = fan_out(li, "l_orderkey").filter(F.col("l_orderkey") < 400)
+        q = q.select("l_orderkey", "l_partkey")
         plan = _plan(q)
         assert "hashpartitioning(l_orderkey" in plan  # the fan-out engaged
         assert "LessThan(l_orderkey,400)" in plan  # filter pushed to scan
         assert "l_comment" not in plan  # pruning intact
         # rows unchanged by the repartition
         assert q.count() == li.filter(F.col("l_orderkey") < 400).count()
+
+    def test_pushdown_survives_operator_fanout(self, spark):
+        from sssom_curator_spark.operators.textstats import langid_heuristic
+
+        docs = _table(spark, "documents")
+        q = langid_heuristic(docs).filter(F.col("doc_id") < 400)
+        plan = _plan(q.select("doc_id", "lang_pred"))
+        assert _fanned_scans(plan) == [True]
+        assert "LessThan(doc_id,400)" in plan
+        assert "n_chars" not in plan
+
+    @pytest.mark.parametrize("name", MAP_HEAVY)
+    def test_map_heavy_queries_fan_out(self, spark, monkeypatch, name):
+        fanned = [f for p in _query_plans(spark, monkeypatch, name) for f in _fanned_scans(p)]
+        assert any(fanned), name
+
+    @pytest.mark.parametrize("name", SHUFFLE_FIRST)
+    def test_shuffle_first_queries_do_not_fan_out(self, spark, monkeypatch, name):
+        plans = _query_plans(spark, monkeypatch, name)
+        assert any("Scan parquet" in p for p in plans), name
+        assert not any(f for p in plans for f in _fanned_scans(p)), name
+
+    def test_fan_out_starts_no_job_on_a_query_input(self, spark, count_jobs):
+        import __spark_entry__ as entrymod
+        from sssom_curator_spark import fan_out
+
+        docs = entrymod._t(spark, SF_DIR, "documents")
+        out, jobs = count_jobs(lambda: fan_out(docs, "doc_id"))
+        assert jobs == 0
+        assert _fanned_scans(_plan(out)) == [True]
+
+    def test_fan_out_keeps_persisted_pages(self, spark, count_jobs):
+        """kg's pages come from ``spark.range``, one split per core: the
+        helper must leave them alone, without starting a job."""
+        from sssom_curator_spark import fan_out
+        from sssom_curator_spark.sources.pages import generate_pages
+
+        pages = generate_pages(spark, 40).persist()
+        try:
+            pages.count()
+            out, jobs = count_jobs(lambda: fan_out(pages, "text"))
+            assert jobs == 0
+            assert out is pages
+        finally:
+            pages.unpersist()
+
+    def test_fan_out_logs_its_choice(self, spark, caplog):
+        import logging
+
+        from sssom_curator_spark import fan_out
+
+        par = spark.sparkContext.defaultParallelism
+        caplog.set_level(logging.DEBUG, logger="sssom_curator_spark")
+        fan_out(_table(spark, "documents"), "doc_id")
+        fan_out(spark.range(0, 10, 1, par), "id")
+        messages = [r.getMessage() for r in caplog.records]
+        assert f"fan_out: fanned out to {par}" in messages
+        assert f"fan_out: kept {par} splits" in messages

@@ -51,6 +51,17 @@ def frame_multiset(cols, rows):
     return Counter(tuple(norm_value(r[i]) for i in order) for r in rows)
 
 
+def compare(scols, srows, ocols, orows) -> dict[str, bool]:
+    """Column names, row count and the value multiset of a Spark result
+    against its oracle's."""
+    ok_cols = sorted(scols) == sorted(ocols)
+    return {
+        "cols_match": ok_cols,
+        "rows_match": len(srows) == len(orows),
+        "values_match": ok_cols and frame_multiset(scols, srows) == frame_multiset(ocols, orows),
+    }
+
+
 def main() -> int:
     from sssom_curator_spark.session import get_spark
 
@@ -103,14 +114,11 @@ def main() -> int:
             failures.append(name)
             report[name] = {"status": "FAIL", "err": "oracle: " + str(e)[:300]}
             continue
-        ok_cols = sorted(scols) == sorted(ocols)
-        ok_count = len(srows) == len(orows)
-        ok_vals = ok_cols and frame_multiset(scols, srows) == frame_multiset(ocols, orows)
+        checks = compare(scols, srows, ocols, orows)
+        ok_cols, ok_count, ok_vals = checks.values()
         report[name] = {
-            "status": "PASS" if (ok_cols and ok_count and ok_vals) else "FAIL",
-            "cols_match": ok_cols,
-            "rows_match": ok_count,
-            "values_match": bool(ok_vals),
+            "status": "PASS" if all(checks.values()) else "FAIL",
+            **checks,
             "spark_rows": len(srows),
             "oracle_rows": len(orows),
         }
