@@ -64,8 +64,9 @@ def run_bench(sf_dir: str, cpus: int, *, pipeline_only: bool = False) -> dict:
     # worker spawn (measured 2-4x inflation — r02's "regressions" were
     # cold-shot noise); run each query BENCH_QUERY_TRIALS times and report
     # the min of the post-warmup trials (host contention only ever
-    # inflates walls, so min = uncontended capability).
-    q_trials = max(1, int(os.environ.get("BENCH_QUERY_TRIALS", "2")))
+    # inflates walls, so min = uncontended capability). The default 3 is
+    # one warm-up and two timed runs: rows move 15-45% between single runs.
+    q_trials = max(1, int(os.environ.get("BENCH_QUERY_TRIALS", "3")))
     qs = entrymod.queries()
     for name in () if pipeline_only else (
         "grounding_join",

@@ -16,11 +16,16 @@ import json
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sssom_curator_spark.functions.curie_ops import curie_prefix, standardize_curie
-from sssom_curator_spark.io.sssom_tsv import lint_frame, write_sssom_tsv
+from sssom_curator_spark.io.sssom_tsv import (
+    _lint_checkpoint,
+    _write_tsv,
+    lint_frame,
+    render_metadata_header,
+)
 from sssom_curator_spark.operators.relational import merge_repository
 from sssom_curator_spark.schema import TSV_COLUMN_ORDER
 
@@ -44,27 +49,35 @@ def standardize_frame(df: DataFrame, alias_map: dict[str, str]) -> DataFrame:
     return out
 
 
+_CURIE_COLUMNS = (
+    "subject_id",
+    "object_id",
+    "predicate_id",
+    "mapping_justification",
+    "mapping_tool_id",
+)
+
+
+def _prefix_set() -> Column:
+    """Aggregate: the sorted distinct non-empty prefixes of every
+    CURIE-carrying column (export/merge.py:155-156)."""
+    row = F.concat(
+        F.array(*map(curie_prefix, _CURIE_COLUMNS)),
+        F.transform(F.coalesce("author_id", F.array()), curie_prefix),
+        F.transform(F.coalesce("reviewer_id", F.array()), curie_prefix),
+    )
+    used = F.filter(row, lambda p: p.isNotNull() & (p != ""))
+    return F.array_sort(F.array_distinct(F.flatten(F.collect_set(used))))
+
+
 def used_prefixes(df: DataFrame) -> list[str]:
     """U5 (export/merge.py:155-156): distinct prefixes actually referenced."""
-    rows = (
-        df.select(
-            F.explode(
-                F.array(
-                    curie_prefix("subject_id"),
-                    curie_prefix("object_id"),
-                    curie_prefix("predicate_id"),
-                    curie_prefix("mapping_justification"),
-                    curie_prefix("mapping_tool_id"),
-                )
-            ).alias("p")
-        )
-        .union(df.select(F.explode(F.coalesce("author_id", F.array())).alias("a")).select(curie_prefix("a")))
-        .union(df.select(F.explode(F.coalesce("reviewer_id", F.array())).alias("r")).select(curie_prefix("r")))
-        .filter(F.col("p").isNotNull() & (F.col("p") != ""))
-        .distinct()
-        .collect()
-    )
-    return sorted(r["p"] for r in rows)
+    return df.agg(_prefix_set().alias("p")).first()["p"]
+
+
+def _merged(frames: dict[str, DataFrame], alias_map: dict[str, str] | None) -> DataFrame:
+    merged = merge_repository(frames).drop("status")
+    return standardize_frame(merged, alias_map) if alias_map else merged
 
 
 def _merged_with_submap(
@@ -72,9 +85,7 @@ def _merged_with_submap(
     prefix_map: dict[str, str],
     alias_map: dict[str, str] | None,
 ) -> tuple[DataFrame, dict[str, str]]:
-    merged = merge_repository(frames).drop("status")
-    if alias_map:
-        merged = standardize_frame(merged, alias_map)
+    merged = _merged(frames, alias_map)
     used = set(used_prefixes(merged))
     return merged, {p: u for p, u in prefix_map.items() if p in used}
 
@@ -87,16 +98,19 @@ def merge_to_tsv(
     alias_map: dict[str, str] | None = None,
     metadata: dict[str, Any] | None = None,
 ) -> list[str]:
-    """Full merge export. Returns serialized columns."""
-    merged, sub_map = _merged_with_submap(frames, prefix_map, alias_map)
-    return write_sssom_tsv(
-        merged,
-        path,
-        prefix_map=sub_map,
-        metadata=metadata,
-        sort=True,
-        drop_duplicates=True,
-    )
+    """Full merge export. Returns serialized columns.
+
+    The used-prefix set is observed on the merged rows before the dedup,
+    inside the one job that checkpoints the linted rows, so the prefix
+    map subset costs no job of its own.
+    """
+    obs = Observation()
+    merged = _merged(frames, alias_map).observe(obs, _prefix_set().alias("p"))
+    frame, columns = _lint_checkpoint(merged, sort=True, drop_duplicates=True)
+    used = set(obs.get["p"])
+    sub_map = {p: u for p, u in prefix_map.items() if p in used}
+    _write_tsv(frame, columns, path, render_metadata_header(sub_map, metadata))
+    return columns
 
 
 def _json_value(value: Any) -> Any:

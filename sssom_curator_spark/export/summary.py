@@ -9,12 +9,14 @@ operator instead of networkx.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sssom_curator_spark.functions.curie_ops import curie_prefix
 from sssom_curator_spark.graph.components import connected_components
-from sssom_curator_spark.operators.relational import contributor_counts
+from sssom_curator_spark.operators.relational import _contributor_totals
 
 __all__ = [
     "summarize",
@@ -29,22 +31,32 @@ __all__ = [
 ]
 
 
+def _nulls_first(value):
+    """Sort key of an ascending Spark ``orderBy`` column: nulls first."""
+    return (value is not None, value)
+
+
+def _most_common(rows, key: str) -> dict:
+    """``{row[key]: row["count"]}`` in ``orderBy(desc("count"), key)``
+    order, sorted on the driver: the rows are a small collected aggregate,
+    and a Spark sort would cost a sampling job and a second shuffle."""
+    ordered = sorted(rows, key=lambda r: (-r["count"], _nulls_first(r[key])))
+    return {r[key]: int(r["count"]) for r in ordered}
+
+
 def summarize(repository: DataFrame) -> dict:
     """YAML-ready summary dict (S8). All aggregates are tiny; collecting
     them is the correct driver/executor split.
 
-    TWO Spark jobs total: one ``groupBy(status, least_prefix,
-    greatest_prefix)`` pass yields the per-status pair dict, and — because
-    every mapping contributes both endpoint prefixes to its pair key — the
-    per-status mapping_count (sum of pair counts) and prefix_count
-    (distinct prefixes across pair keys) fall out driver-side for free;
-    the second job is the contributor explode. The previous version issued
-    2 + 2×n_statuses jobs (a file_totals pass, then a filtered
-    prefix_pair_counts pass per status).
+    Two grouped aggregations, each collected unsorted and ordered on the
+    driver. One ``groupBy(status, least_prefix, greatest_prefix)`` pass
+    yields the per-status pair dict, and — because every mapping
+    contributes both endpoint prefixes to its pair key — the per-status
+    mapping_count (sum of pair counts) and prefix_count (distinct prefixes
+    across pair keys) fall out driver-side for free; the other is the
+    contributor count over exploded authors.
     """
-    from sssom_curator_spark.functions.curie_ops import curie_prefix as _cp
-
-    sp, op = _cp("subject_id"), _cp("object_id")
+    sp, op = curie_prefix("subject_id"), curie_prefix("object_id")
     pair_rows = (
         repository.groupBy(
             F.col("status"),
@@ -52,8 +64,15 @@ def summarize(repository: DataFrame) -> dict:
             F.greatest(sp, op).alias("target_prefix"),
         )
         .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy("status", F.desc("count"), "source_prefix", "target_prefix")
         .collect()
+    )
+    pair_rows.sort(
+        key=lambda r: (
+            _nulls_first(r["status"]),
+            -r["count"],
+            _nulls_first(r["source_prefix"]),
+            _nulls_first(r["target_prefix"]),
+        )
     )
     out: dict = {"files": {}, "contributors": {}}
     for r in pair_rows:
@@ -68,8 +87,7 @@ def summarize(repository: DataFrame) -> dict:
         )
     for f in out["files"].values():
         f["prefix_count"] = len(f["prefix_count"])
-    for r in contributor_counts(repository).collect():
-        out["contributors"][r["author"]] = r["count"]
+    out["contributors"] = _most_common(_contributor_totals(repository).collect(), "author")
     return out
 
 
@@ -201,56 +219,47 @@ def zero_filled_histogram(df: DataFrame, value_col: str) -> DataFrame:
     )
 
 
-def chart_data(
-    repository: DataFrame,
-    *,
-    components: DataFrame | None = None,
-    stats: DataFrame | None = None,
-) -> dict:
+def chart_data(repository: DataFrame, *, components: DataFrame | None = None) -> dict:
     """S9 chart aggregates (reference export/charts.py:32-184 renders
     these three Counter series with matplotlib; the container has no
     matplotlib, so the sink is the DATA — the distributed aggregations —
     serialized YAML/JSON-ready; any plotting frontend consumes it):
 
     - ``component_sizes``: zero-filled histogram of positive-component
-      node counts (charts.py:221-229 `_countplot_list`);
+      node counts (charts.py:221-229 `_countplot_list`), from the
+      per-component row counts of ``components`` (one row per node) and
+      filled on the driver;
     - ``prefixes``: per-prefix mapping participation, most-common order
       (charts.py:165-171);
     - ``relations``: predicate counts, most-common order
       (charts.py:172-177).
+
+    The prefix and relation counts come from one grouped aggregation over
+    a tagged explode. Both collects are unsorted; the order is set on the
+    driver.
     """
-    # ``stats``: reuse an already-built component_stats frame (make_reports
-    # returns one — recomputing the per-component aggregation here would
-    # run that job twice per export)
-    if stats is None:
-        stats = component_stats(repository, components=components)
-    sizes = stats.select("n_nodes")
-    size_hist = {
-        int(r["size"]): int(r["count"])
-        for r in zero_filled_histogram(sizes, "n_nodes").collect()
-    }
+    comps = components if components is not None else positive_components(repository)
+    sizes = Counter(
+        r["n"] for r in comps.groupBy("component").agg(F.count(F.lit(1)).alias("n")).collect()
+    )
+    size_hist = {s: sizes[s] for s in range(min(sizes), max(sizes) + 1)} if sizes else {}
     true_maps = repository.filter(
         (F.col("status") == "positive") & F.col("predicate_modifier").isNull()
     )
-    prefixes = (
-        true_maps.select(
-            F.explode(
-                F.array(curie_prefix("subject_id"), curie_prefix("object_id"))
-            ).alias("prefix")
+    tagged = true_maps.select(
+        F.inline(
+            F.array(
+                F.struct(F.lit("prefixes").alias("kind"), curie_prefix("subject_id").alias("key")),
+                F.struct(F.lit("prefixes").alias("kind"), curie_prefix("object_id").alias("key")),
+                F.struct(F.lit("relations").alias("kind"), F.col("predicate_id").alias("key")),
+            )
         )
-        .groupBy("prefix")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), "prefix")
     )
-    relations = (
-        true_maps.groupBy(F.col("predicate_id").alias("relation"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), "relation")
-    )
+    rows = tagged.groupBy("kind", "key").agg(F.count(F.lit(1)).alias("count")).collect()
     return {
         "component_sizes": size_hist,
-        "prefixes": {r["prefix"]: int(r["count"]) for r in prefixes.collect()},
-        "relations": {r["relation"]: int(r["count"]) for r in relations.collect()},
+        "prefixes": _most_common([r for r in rows if r["kind"] == "prefixes"], "key"),
+        "relations": _most_common([r for r in rows if r["kind"] == "relations"], "key"),
     }
 
 
@@ -263,15 +272,13 @@ def make_reports(repository: DataFrame) -> dict:
     Returns ``{"component_stats": DataFrame, "unstable_components":
     DataFrame, "incomplete_components": DataFrame, "chart_data": dict}``.
     The DataFrames stay lazy (their expensive shared input is the already-
-    materialized CC frame); ``chart_data`` is collected driver-side as
-    before."""
+    materialized CC frame); ``chart_data`` is collected driver-side."""
     comps = positive_components(repository)
-    stats = component_stats(repository, components=comps)
     return {
-        "component_stats": stats,
+        "component_stats": component_stats(repository, components=comps),
         "unstable_components": unstable_components(repository, components=comps),
         "incomplete_components": incomplete_components(repository, components=comps),
-        "chart_data": chart_data(repository, components=comps, stats=stats),
+        "chart_data": chart_data(repository, components=comps),
     }
 
 

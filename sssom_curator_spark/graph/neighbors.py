@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from sssom_curator_spark import log
 from sssom_curator_spark.graph._edges import symmetric_adjacency, undirected_edges
+from sssom_curator_spark.graph._iterate import checkpoint
 from sssom_curator_spark.operators.textstats import stable_round
 
 __all__ = ["neighbor_jaccard"]
@@ -47,22 +48,21 @@ def neighbor_jaccard(
     und = undirected_edges(edges, src, dst)
     adj = symmetric_adjacency(und)
     # node-sized with THREE consumers (hub filter + both degree joins) —
-    # materialize once instead of re-running the adjacency aggregation
-    deg = adj.groupBy("m").agg(F.count(F.lit(1)).alias("d")).localCheckpoint()
+    # materialize once instead of re-running the adjacency aggregation;
+    # the hub count is observed on that same job
+    metrics = None if max_degree is None else {"hubs": F.count_if(F.col("d") > max_degree)}
+    deg, seen = checkpoint(adj.groupBy("m").agg(F.count(F.lit(1)).alias("d")), metrics)
     wedge_src = adj
     if max_degree is not None:
-        # derived from the deg checkpoint: the count below scans node-sized
-        # materialized blocks, not the corpus-shaped aggregation
-        hubs = deg.filter(F.col("d") > max_degree).select(F.col("m").alias("n"))
-        n_hubs = hubs.count()
-        if n_hubs:
+        if seen["hubs"]:
             log.warning(
                 "neighbor_jaccard: dropping %d hub neighbors with degree > %d "
                 "from the wedge join (scores for pairs sharing them are "
                 "lower bounds)",
-                n_hubs,
+                seen["hubs"],
                 max_degree,
             )
+        hubs = deg.filter(F.col("d") > max_degree).select(F.col("m").alias("n"))
         wedge_src = adj.join(hubs, on="n", how="left_anti")
     a = wedge_src.select(F.col("n"), F.col("m").alias("node_a"))
     b = wedge_src.select(F.col("n"), F.col("m").alias("node_b"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sssom_curator_spark.graph._iterate import checkpoint
 from sssom_curator_spark.schema import (
     CANONICAL_KEY_COLUMNS,
     CANONICAL_SORT_COLUMNS,
@@ -50,17 +51,23 @@ _DATE_COLUMNS = {"mapping_date", "review_date"}
 _DOUBLE_COLUMNS = {"confidence", "reviewer_agreement"}
 
 
-def parse_metadata_header(path: str) -> tuple[dict[str, str], dict[str, Any]]:
-    """Parse the ``#``-prefixed YAML header of an SSSOM TSV.
+def parse_metadata_header(path: str) -> tuple[dict[str, str], dict[str, Any], list[str]]:
+    """Parse the ``#``-prefixed YAML header and the column header of an
+    SSSOM TSV in one driver-side read.
 
-    Returns ``(prefix_map, metadata)``. Driver-side by design: the header is
-    a few dozen lines regardless of data scale (the reference's 43.4M-row
-    SeMRA file still has a tiny header — repository.py:987-997).
+    Returns ``(prefix_map, metadata, columns)``. Driver-side by design: the
+    header is a few dozen lines regardless of data scale (the reference's
+    43.4M-row SeMRA file still has a tiny header — repository.py:987-997).
+    ``columns`` is the first line the CSV reader keeps (it skips blank and
+    ``#`` lines), named as Spark names header columns: an empty name
+    becomes ``_c<i>`` and a repeated one (case-insensitively) gets its
+    position appended. It is empty for a file with no column header.
     """
     prefix_map: dict[str, str] = {}
     metadata: dict[str, Any] = {}
     in_curie_map = False
     with open(path, encoding="utf-8") as handle:
+        line = ""
         for line in handle:
             if not line.startswith("#"):
                 break
@@ -75,7 +82,15 @@ def parse_metadata_header(path: str) -> tuple[dict[str, str], dict[str, Any]]:
             in_curie_map = False
             key, _, value = body.partition(":")
             metadata[key.strip()] = value.strip().strip("'\"")
-    return prefix_map, metadata
+        while line and (line.startswith("#") or not line.strip()):
+            line = handle.readline()
+    names = line.rstrip("\r\n").split("\t") if line else []
+    lower = [n.lower() for n in names]
+    columns = [
+        f"_c{i}" if not n else f"{n}{i}" if lower.count(n.lower()) > 1 else n
+        for i, n in enumerate(names)
+    ]
+    return prefix_map, metadata, columns
 
 
 def read_sssom_tsv(
@@ -87,17 +102,20 @@ def read_sssom_tsv(
     comment lines executor-side, so a multi-GB TSV never touches the
     driver); dynamic columns are normalized into the fixed
     :data:`MAPPING_SCHEMA` — missing columns become typed nulls, multi-value
-    author/reviewer cells split on ``|``.
+    author/reviewer cells split on ``|``. The column names come from the
+    driver's header read and are passed as an all-string schema, so the
+    scan starts no job to find them.
     """
-    prefix_map, metadata = parse_metadata_header(path)
+    prefix_map, metadata, columns = parse_metadata_header(path)
     raw = (
         spark.read.option("sep", "\t")
         .option("header", True)
         .option("comment", "#")
         .option("nullValue", "")
+        .schema(T.StructType([T.StructField(c, T.StringType()) for c in columns]))
         .csv(path)
     )
-    present = set(raw.columns)
+    present = set(columns)
     projections = []
     for field in MAPPING_SCHEMA.fields:
         name = field.name
@@ -182,15 +200,13 @@ def insert_sssom_tsv(
 
         for col in ("subject_id", "object_id", "predicate_id"):
             incoming = incoming.withColumn(col, standardize_curie(col, alias_map))
-    merged = existing.unionByName(incoming)
-    # The write below truncates `path`, which `existing` still lazily
-    # reads — materialize the union first so the stream never races the
-    # overwrite. The file is human-scale (the reference rewrites it
-    # in-memory per insert); at corpus scale this verb is an Iceberg
+    # `existing` still lazily reads `path`; write_sssom_tsv checkpoints
+    # the linted rows before it truncates the file, so the stream never
+    # races the overwrite. The file is human-scale (the reference rewrites
+    # it in-memory per insert); at corpus scale this verb is an Iceberg
     # append, not a TSV rewrite.
-    merged = merged.localCheckpoint()
     return write_sssom_tsv(
-        merged,
+        existing.unionByName(incoming),
         path,
         prefix_map=prefix_map,
         metadata=metadata,
@@ -254,27 +270,6 @@ def lint_frame(
     return out
 
 
-def _nonempty_columns(df: DataFrame, candidates: list[str]) -> list[str]:
-    """Dynamic column pruning (F9): one aggregation pass, not N count jobs.
-
-    The reference serializes only non-empty columns (compare
-    tests/test_init.py:146 vs :184 headers). A single ``max(isNotNull)``
-    aggregate per column resolves all of them in one distributed job.
-    """
-    probes = []
-    for name in candidates:
-        col = F.col(name)
-        if isinstance(df.schema[name].dataType, T.ArrayType):
-            probe = F.coalesce(F.size(col) > 0, F.lit(False))
-        else:
-            probe = col.isNotNull()
-        probes.append(F.max(probe).alias(name))
-    row = df.select(*probes).first()
-    if row is None:  # empty frame: serialize nothing but the identity columns
-        return [c for c in candidates if c in set(CANONICAL_KEY_COLUMNS)]
-    return [name for name in candidates if row[name]]
-
-
 def _format_cell(value: Any) -> str:
     if value is None:
         return ""
@@ -303,6 +298,51 @@ def render_metadata_header(
     return "\n".join(lines)
 
 
+def _lint_checkpoint(
+    df: DataFrame, *, exclude_columns: list[str] | None = None, **lint: Any
+) -> tuple[DataFrame, list[str]]:
+    """Lint ``df`` and ``localCheckpoint`` the result in one job, observing
+    on it the row count and a non-empty probe per serializable column.
+
+    Returns ``(checkpointed rows, serialized columns)``. Dynamic column
+    pruning (F9): the reference serializes only non-empty columns (compare
+    tests/test_init.py:146 vs :184 headers); an empty frame serializes the
+    canonical key columns only. The checkpoint is what the rows stream
+    from afterwards, so neither the probes nor a caller's own observations
+    on ``df`` re-run the lint stack.
+    """
+    linted = lint_frame(df, **lint)
+    excluded = set(exclude_columns or []) | {"record_id"}
+    candidates = [c for c in TSV_COLUMN_ORDER if c not in excluded and c in linted.columns]
+    probes = {"_rows": F.count(F.lit(1))}
+    for name in candidates:
+        col = F.col(name)
+        if isinstance(linted.schema[name].dataType, T.ArrayType):
+            probes[name] = F.max(F.coalesce(F.size(col) > 0, F.lit(False)))
+        else:
+            probes[name] = F.max(col.isNotNull())
+    frame, seen = checkpoint(linted, probes)
+    if not seen["_rows"]:
+        return frame, [c for c in candidates if c in CANONICAL_KEY_COLUMNS]
+    return frame, [c for c in candidates if seen[c]]
+
+
+def _write_tsv(frame: DataFrame, columns: list[str], path: str, header: str) -> None:
+    """Write ``header``, the column line and ``frame``'s rows to ``path``.
+
+    Rows stream through ``toLocalIterator``, so the driver holds one
+    partition at a time, never the whole file (a ``toPandas``/Arrow
+    collect would hold all of it).
+    """
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    with open(path, "w", encoding="utf-8") as handle:
+        if header:
+            handle.write(header + "\n")
+        handle.write("\t".join(columns) + "\n")
+        for row in frame.select(*columns).toLocalIterator(prefetchPartitions=True):
+            handle.write("\t".join(_format_cell(row[c]) for c in columns) + "\n")
+
+
 def write_sssom_tsv(
     df: DataFrame,
     path: str,
@@ -317,30 +357,23 @@ def write_sssom_tsv(
 ) -> list[str]:
     """SSSOM TSV sink (S3): lint + dynamic columns + metadata header.
 
-    Returns the serialized column list. The lint stack and non-empty-column
-    probe run distributed; rows stream to the single TSV through
+    Returns the serialized column list. The lint stack runs distributed
+    and is checkpointed once; the non-empty-column probes are observed on
+    that checkpoint job, so they cost no job of their own. Rows then
+    stream from the checkpoint to the single TSV through
     ``toLocalIterator`` (one partition in memory at a time), because a
-    single ordered TSV file is inherently a driver-side artifact. Scale
-    path: write the linted frame to a partitioned table instead.
+    single ordered TSV file is inherently a driver-side artifact. The
+    checkpoint holds every row before ``path`` is opened, so ``df`` may
+    read the file it overwrites. Scale path: write the linted frame to a
+    partitioned table instead.
     """
-    linted = lint_frame(
+    frame, columns = _lint_checkpoint(
         df,
+        exclude_columns=exclude_columns,
         sort=sort,
         drop_duplicates=drop_duplicates,
         exclude_mappings=exclude_mappings,
         exclude_prefixes=exclude_prefixes,
     )
-    excluded = set(exclude_columns or []) | {"record_id"}
-    candidates = [c for c in TSV_COLUMN_ORDER if c not in excluded and c in linted.columns]
-    columns = _nonempty_columns(linted, candidates)
-    projected = linted.select(*columns)
-
-    header = render_metadata_header(prefix_map, metadata)
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    with open(path, "w", encoding="utf-8") as handle:
-        if header:
-            handle.write(header + "\n")
-        handle.write("\t".join(columns) + "\n")
-        for row in projected.toLocalIterator(prefetchPartitions=True):
-            handle.write("\t".join(_format_cell(row[c]) for c in columns) + "\n")
+    _write_tsv(frame, columns, path, render_metadata_header(prefix_map, metadata))
     return columns

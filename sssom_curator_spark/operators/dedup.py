@@ -34,6 +34,7 @@ if TYPE_CHECKING:  # annotation-only: the opt-in cache level for ngram_jaccard_p
 
 from sssom_curator_spark import fan_out, log
 from sssom_curator_spark.functions.text_norm import norm_text_col
+from sssom_curator_spark.graph._iterate import checkpoint
 from sssom_curator_spark.operators.textstats import stable_round
 
 __all__ = [
@@ -317,18 +318,22 @@ def ngram_jaccard_pairs(
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     joinable = sh
     if max_shingle_df is not None:
+        # the hot set is checkpointed with its size observed on that job,
+        # so the log costs no job and the anti-join does not re-derive it
         dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        hot = dfreq.filter(F.col("_df") > max_shingle_df)
-        n_hot = hot.count()
-        if n_hot:
+        hot, seen = checkpoint(
+            dfreq.filter(F.col("_df") > max_shingle_df).select("shingle"),
+            {"n": F.count(F.lit(1))},
+        )
+        if seen["n"]:
             log.warning(
                 "ngram_jaccard_pairs: dropping %d shingles with document "
                 "frequency > %d from the candidate join (scores for pairs "
                 "sharing them are lower bounds)",
-                n_hot,
+                seen["n"],
                 max_shingle_df,
             )
-        joinable = sh.join(hot.select("shingle"), on="shingle", how="left_anti")
+        joinable = sh.join(hot, on="shingle", how="left_anti")
     a = joinable.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = joinable.select(F.col("doc_id").alias("doc_b"), "shingle")
     # Pre-partition the pair stream by its grouping key (guide §2.3/§2.4):

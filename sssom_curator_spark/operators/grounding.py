@@ -38,6 +38,7 @@ from sssom_curator_spark import fan_out, log
 from sssom_curator_spark.functions.aho_corasick import AhoCorasick
 from sssom_curator_spark.functions.scoring import score_match_batch
 from sssom_curator_spark.functions.text_norm import norm_text_col, normalize_text
+from sssom_curator_spark.graph._iterate import checkpoint
 
 __all__ = [
     "with_norm_text",
@@ -333,15 +334,19 @@ def comention_edges(
         .localCheckpoint()
     )
     if max_entities_per_doc is not None:
+        # the hot set is checkpointed with its size observed on that job,
+        # so the log costs no job and the anti-join does not re-derive it
         sizes = ents.groupBy("_doc").agg(F.count(F.lit(1)).alias("_k"))
-        hot = sizes.filter(F.col("_k") > max_entities_per_doc).select("_doc")
-        n_hot = hot.count()
-        if n_hot:
+        hot, seen = checkpoint(
+            sizes.filter(F.col("_k") > max_entities_per_doc).select("_doc"),
+            {"n": F.count(F.lit(1))},
+        )
+        if seen["n"]:
             log.warning(
                 "comention_edges: dropping %d documents with more than %d "
                 "distinct entities from pair induction (catalog pages "
                 "would contribute O(k^2) pairs each)",
-                n_hot,
+                seen["n"],
                 max_entities_per_doc,
             )
         ents = ents.join(hot, on="_doc", how="left_anti")

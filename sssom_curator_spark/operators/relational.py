@@ -160,15 +160,19 @@ def prefix_pair_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def contributor_counts(df: DataFrame) -> DataFrame:
-    """A2 (export/summary.py:83-99): per-ORCID counts over exploded authors."""
+def _contributor_totals(df: DataFrame) -> DataFrame:
+    """``(author, count)`` per ORCID over exploded authors, unsorted."""
     return (
         df.select(F.explode("author_id").alias("author"))
         .filter(curie_prefix("author").eqNullSafe("orcid"))
         .groupBy("author")
         .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), "author")
     )
+
+
+def contributor_counts(df: DataFrame) -> DataFrame:
+    """A2 (export/summary.py:83-99): per-ORCID counts over exploded authors."""
+    return _contributor_totals(df).orderBy(F.desc("count"), "author")
 
 
 def file_totals(df: DataFrame) -> DataFrame:

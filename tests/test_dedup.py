@@ -3,6 +3,8 @@ deterministic winners."""
 
 from __future__ import annotations
 
+import logging
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -124,27 +126,37 @@ class TestSimHash:
 
 
 class TestHotShingleCap:
-    def test_cap_bounds_candidate_join(self, spark):
+    def test_cap_bounds_candidate_join(self, spark, caplog, count_jobs):
         """Boilerplate-skew fixture: every doc shares one hot shingle; the
         cap must keep the join from going quadratic while distinct
-        genuine near-dup pairs survive with their (lower-bound) score."""
+        genuine near-dup pairs survive with their (lower-bound) score.
+        The dropped count is logged from the hot set's checkpoint, which
+        the anti-join reads: the cap adds that checkpoint's jobs and no
+        other (5 here; a separate count and a re-derived hot set took 7-8)."""
         boiler = "all rights reserved contact us"
         rows = [(f"d{i:02d}", f"{boiler} unique body {i} {i} {i}") for i in range(30)]
         rows += [("x1", f"{boiler} shared long tail about mapping curation"),
                  ("x2", f"{boiler} shared long tail about mapping curation")]
-        docs = spark.createDataFrame(rows, "doc_id string, text string")
+        docs = spark.createDataFrame(rows, "doc_id string, text string").localCheckpoint()
 
-        capped = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.3, max_shingle_df=5)
-        pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in capped.collect()}
+        with caplog.at_level(logging.WARNING, logger="sssom_curator_spark"):
+            capped, n_capped = count_jobs(
+                lambda: ngram_jaccard_pairs(
+                    docs, shingle_n=3, threshold=0.3, max_shingle_df=5
+                ).collect()
+            )
+        assert "ngram_jaccard_pairs: dropping 5 shingles" in caplog.text
+        exact_rows, n_exact = count_jobs(
+            lambda: ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.3).collect()
+        )
+        assert n_capped - n_exact <= 5
+        pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in capped}
         assert ("x1", "x2") in pairs
         # the 30 boilerplate-only docs share ONLY capped shingles → no pairs
         assert all(p == ("x1", "x2") for p in pairs)
 
         # uncapped agrees on the surviving pair's upper bound
-        exact = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.3).collect()
-        }
+        exact = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in exact_rows}
         assert pairs[("x1", "x2")] <= exact[("x1", "x2")]
 
 

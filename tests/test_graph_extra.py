@@ -311,7 +311,9 @@ class TestNeighborJaccard:
         assert got == want
         assert got[("a", "b")][0] == 2
 
-    def test_max_degree_lower_bounds(self, spark):
+    def test_max_degree_lower_bounds(self, spark, caplog, count_jobs):
+        """The hub count is observed on the degree checkpoint's job: the
+        capped call starts no job beyond the uncapped one."""
         from sssom_curator_spark.graph.neighbors import neighbor_jaccard
 
         # hub h connects to everyone; p and q ALSO share n
@@ -323,10 +325,12 @@ class TestNeighborJaccard:
             (r["node_a"], r["node_b"]): r["common"]
             for r in neighbor_jaccard(df).collect()
         }
-        capped = {
-            (r["node_a"], r["node_b"]): r["common"]
-            for r in neighbor_jaccard(df, max_degree=4).collect()
-        }
+        df = df.localCheckpoint()
+        with caplog.at_level(logging.WARNING, logger="sssom_curator_spark"):
+            capped_df, n_capped = count_jobs(lambda: neighbor_jaccard(df, max_degree=4))
+        assert "neighbor_jaccard: dropping 1 hub neighbors" in caplog.text
+        assert n_capped == count_jobs(lambda: neighbor_jaccard(df))[1]
+        capped = {(r["node_a"], r["node_b"]): r["common"] for r in capped_df.collect()}
         # with the hub dropped from wedges, only the n-witnessed pair survives
         assert full[("p", "q")] == 2 and capped[("p", "q")] == 1
         assert ("r", "s") in full and ("r", "s") not in capped

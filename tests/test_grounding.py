@@ -208,14 +208,27 @@ class TestComentionEdges:
         }
         assert strict == {("E:a", "E:b"): 2}
 
-    def test_hot_doc_cap(self, spark):
+    def test_hot_doc_cap(self, spark, caplog, count_jobs):
+        """The dropped-document count is logged from the hot set's
+        checkpoint, which the anti-join reads: the cap adds that
+        checkpoint's jobs and no other (3 here; a separate count and a
+        re-derived hot set took 5)."""
+        import logging
+
         import pandas as pd
 
         from sssom_curator_spark.operators.grounding import comention_edges
 
         rows = [(1, f"E:{i}") for i in range(10)] + [(2, "E:0"), (2, "E:1")]
         df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "object_id"]))
-        capped = comention_edges(df, max_entities_per_doc=5).collect()
+        df = df.localCheckpoint()
+        with caplog.at_level(logging.WARNING, logger="sssom_curator_spark"):
+            capped, n_capped = count_jobs(
+                lambda: comention_edges(df, max_entities_per_doc=5).collect()
+            )
+        assert "comention_edges: dropping 1 documents" in caplog.text
+        _, n_all = count_jobs(lambda: comention_edges(df).collect())
+        assert n_capped - n_all <= 3
         assert {(r["subject_id"], r["object_id"]) for r in capped} == {("E:0", "E:1")}
 
 

@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 from sssom_curator_spark.export.merge import merge_to_tsv, standardize_frame
 from sssom_curator_spark.io.sssom_tsv import read_sssom_tsv, write_sssom_tsv
 from sssom_curator_spark.operators.relational import merge_repository
-from sssom_curator_spark.schema import STATUSES
+from sssom_curator_spark.schema import (
+    CANONICAL_KEY_COLUMNS,
+    MAPPING_SCHEMA,
+    STATUSES,
+    TSV_COLUMN_ORDER,
+)
 from sssom_curator_spark.sources.fixtures import PREFIX_MAP, seed_repository
 
 MAPPING_SET_ID = "https://example.org/ms/merged.sssom.tsv"
@@ -35,6 +40,12 @@ CHEBI:101096\tethoxzolamide\tskos:exactMatch\t\tmesh:C523270\t6-ethoxybenzothiaz
 CHEBI:11986\t4-fluoro-L-threonine\tskos:exactMatch\t\tmesh:C048271\t4-fluorothreonine\tsemapv:ManualMappingCuration\torcid:0000-0003-4423-4370\t\t\t\t\t2026-05-08\t\t1.0\t
 CHEBI:61700\t(+)-valencene\tskos:exactMatch\t\tmesh:C506706\tvalencene\tsemapv:ManualMappingCuration\t\torcid:0000-0003-4423-4370\t\t\t\t\t2026-05-08\t\t0.0
 """
+
+#: the checkpoint job's stages (dedup shuffle, sort sampling, sort
+#: shuffle, result) plus one row-streaming job per checkpoint partition;
+#: 9 when the prefix set, the column probes and the rows each re-ran the
+#: dedup
+MERGE_TO_TSV_JOBS = 5
 
 
 def _frames(spark):
@@ -117,6 +128,38 @@ class TestRoundTrip:
         assert back.count() == repo.count()
         subjects = [r["subject_id"] for r in back.collect()]
         assert subjects == sorted(subjects)
+
+    def test_empty_frame_writes_key_columns(self, spark, tmp_path):
+        path = str(tmp_path / "empty.sssom.tsv")
+        cols = write_sssom_tsv(
+            spark.createDataFrame([], MAPPING_SCHEMA), path, prefix_map=PREFIX_MAP
+        )
+        assert cols == [c for c in TSV_COLUMN_ORDER if c in CANONICAL_KEY_COLUMNS]
+        back, prefix_map, _ = read_sssom_tsv(spark, path)
+        assert back.count() == 0
+        assert prefix_map == PREFIX_MAP
+        with open(path) as fh:
+            body = [line for line in fh if not line.startswith("#")]
+        assert body == ["\t".join(cols) + "\n"]
+
+
+class TestExportJobs:
+    """Each answer on the export path costs one Spark job or none. The
+    bounds are the counts measured on these fixtures (``local[4]``)."""
+
+    def test_read_starts_no_job(self, spark, tmp_path, count_jobs):
+        path = str(tmp_path / "read.sssom.tsv")
+        write_sssom_tsv(seed_repository(spark).drop("status"), path, prefix_map=PREFIX_MAP)
+        (back, prefix_map, _meta), n_jobs = count_jobs(lambda: read_sssom_tsv(spark, path))
+        assert n_jobs == 0
+        assert prefix_map == PREFIX_MAP
+        assert back.count() == 4
+
+    def test_merge_to_tsv_jobs(self, spark, tmp_path, count_jobs):
+        frames = _frames(spark)
+        out = str(tmp_path / "merged.sssom.tsv")
+        _, n_jobs = count_jobs(lambda: merge_to_tsv(frames, out, prefix_map=PREFIX_MAP))
+        assert n_jobs <= MERGE_TO_TSV_JOBS
 
 
 class TestCurationDateStamp:

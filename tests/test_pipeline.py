@@ -32,6 +32,12 @@ EXPECTED_WITH_XREFS = {
     ("mesh:C067604", "CHEBI:9921"),  # visnadin
 }
 
+#: measured on ``seed_repository``: connected components' small path plus
+#: two grouped aggregations (make_reports, 12 with Spark-side sorts); two
+#: grouped aggregations (summarize, 8 with Spark-side sorts)
+MAKE_REPORTS_JOBS = 4
+SUMMARIZE_JOBS = 4
+
 
 class TestEndToEnd:
     def test_precision_recall_against_planted_truth(self, spark):
@@ -114,6 +120,17 @@ class TestSummaries:
         assert out["files"]["positive"]["mapping_count"] == 1
         assert out["files"]["positive"]["prefix_pairs"] == {"CHEBI-mesh": 1}
         assert out["contributors"] == {"orcid:0000-0003-4423-4370": 2}
+
+    def test_summary_jobs(self, spark, count_jobs):
+        """Each report is a handful of grouped aggregations collected
+        unsorted; the bounds are the counts measured on this fixture."""
+        from sssom_curator_spark.export.summary import make_reports
+
+        repo = seed_repository(spark)
+        _, n_reports = count_jobs(lambda: make_reports(repo))
+        _, n_summary = count_jobs(lambda: summarize(repo))
+        assert n_reports <= MAKE_REPORTS_JOBS
+        assert n_summary <= SUMMARIZE_JOBS
 
     def test_component_stats_density(self, spark):
         repo = seed_repository(spark)
@@ -369,6 +386,93 @@ class TestChartData:
         assert out["component_sizes"] == {2: 1}
         assert out["prefixes"] == {"CHEBI": 1, "mesh": 1}
         assert out["relations"] == {"skos:exactMatch": 1}
+
+    def test_driver_order_matches_spark_order_by(self, spark):
+        """Counts sorted on the driver keep the order of the Spark
+        ``orderBy`` they replace: count descending, ties broken on the key,
+        a null key first among its ties."""
+        import datetime
+
+        from sssom_curator_spark.export.summary import chart_data
+        from sssom_curator_spark.functions.curie_ops import curie_prefix
+        from sssom_curator_spark.operators.relational import contributor_counts
+        from pyspark.sql import types as T
+
+        from sssom_curator_spark.schema import MAPPING_SCHEMA
+
+        def row(s, o, status, predicate, authors):
+            base = {f.name: None for f in MAPPING_SCHEMA.fields}
+            base.update(
+                subject_id=s,
+                predicate_id=predicate,
+                object_id=o,
+                mapping_justification="semapv:ManualMappingCuration",
+                status=status,
+                author_id=authors,
+                mapping_date=datetime.date(2026, 1, 1),
+            )
+            return base
+
+        exact, broad = "skos:exactMatch", "skos:broadMatch"
+        nullable = T.StructType([T.StructField(f.name, f.dataType) for f in MAPPING_SCHEMA.fields])
+        repo = spark.createDataFrame(
+            [
+                row(None, "b:1", "positive", exact, ["orcid:2"]),
+                row("a:1", "b:2", "positive", broad, ["orcid:3"]),
+                row("c:1", "d:1", "positive", exact, ["orcid:1", "orcid:3"]),
+                row("a:2", "c:2", "positive", broad, None),
+                row(None, None, "negative", exact, ["orcid:2", "x:9"]),
+                row("d:2", "a:3", "negative", exact, None),
+            ],
+            nullable,
+        )
+        true_maps = repo.filter(
+            (F.col("status") == "positive") & F.col("predicate_modifier").isNull()
+        )
+        prefixes = (
+            true_maps.select(
+                F.explode(F.array(curie_prefix("subject_id"), curie_prefix("object_id"))).alias("p")
+            )
+            .groupBy("p")
+            .agg(F.count(F.lit(1)).alias("count"))
+            .orderBy(F.desc("count"), "p")
+        )
+        relations = (
+            true_maps.groupBy("predicate_id")
+            .agg(F.count(F.lit(1)).alias("count"))
+            .orderBy(F.desc("count"), "predicate_id")
+        )
+        charts = chart_data(repo)
+        assert list(charts["prefixes"].items()) == [tuple(r) for r in prefixes.collect()]
+        assert list(charts["prefixes"])[:4] == ["a", "b", "c", None]
+        assert list(charts["relations"].items()) == [tuple(r) for r in relations.collect()]
+
+        sp, op = curie_prefix("subject_id"), curie_prefix("object_id")
+        pairs = (
+            repo.groupBy(
+                "status",
+                F.least(sp, op).alias("source_prefix"),
+                F.greatest(sp, op).alias("target_prefix"),
+            )
+            .agg(F.count(F.lit(1)).alias("count"))
+            .orderBy("status", F.desc("count"), "source_prefix", "target_prefix")
+            .collect()
+        )
+        out = summarize(repo)
+        assert list(out["files"]) == ["negative", "positive"]
+        assert [
+            (status, key, n)
+            for status, f in out["files"].items()
+            for key, n in f["prefix_pairs"].items()
+        ] == [
+            (r["status"], f"{r['source_prefix']}-{r['target_prefix']}", r["count"])
+            for r in pairs
+        ]
+        assert list(out["files"]["negative"]["prefix_pairs"])[0] == "None-None"
+        assert list(out["contributors"].items()) == [
+            tuple(r) for r in contributor_counts(repo).collect()
+        ]
+        assert list(out["contributors"]) == ["orcid:2", "orcid:3", "orcid:1"]
 
     def test_zero_fill_between_min_and_max(self, spark):
         from sssom_curator_spark.export.summary import zero_filled_histogram
