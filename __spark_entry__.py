@@ -1186,13 +1186,13 @@ def q_curation_marks(spark: SparkSession, sf_dir: str) -> DataFrame:
     k % 6 == 5) marked with mark #(k % 6)."""
     import datetime
 
-    from sssom_curator_spark.curation.state import apply_marks
-    from sssom_curator_spark.schema import MAPPING_SCHEMA
+    from sssom_curator_spark.curation.state import apply_marks, with_record_id
+    from sssom_curator_spark.functions.curie_ops import curie_identifier
+    from sssom_curator_spark.io.sssom_tsv import conform_to_mapping_schema
 
     nation = _t(spark, sf_dir, "nation")
     k = F.col("n_nationkey")
     base = nation.select(
-        k.alias("_k"),
         F.concat(F.lit("CHEBI:"), k.cast("string")).alias("subject_id"),
         F.lit("skos:exactMatch").alias("predicate_id"),
         F.concat(F.lit("mesh:C"), k.cast("string")).alias("object_id"),
@@ -1203,19 +1203,16 @@ def q_curation_marks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("predicted"))
         .alias("status"),
     )
-    for f in MAPPING_SCHEMA.fields:
-        if f.name not in base.columns:
-            base = base.withColumn(f.name, F.lit(None).cast(f.dataType))
-    from sssom_curator_spark.curation.state import with_record_id
-
-    repo = with_record_id(base)
+    repo = with_record_id(conform_to_mapping_schema(base))
+    # row k's key is the identifier of its subject CURIE
+    row_k = curie_identifier("subject_id").cast("long")
     mark = F.element_at(
         F.array(*[F.lit(m) for m in ["correct", "incorrect", "unsure", "BROAD", "NARROW", "correct"]]),
-        (F.col("_k") % 6 + 1).cast("int"),
+        (row_k % 6 + 1).cast("int"),
     )
     marks = repo.select(F.col("record_id"), mark.alias("mark"))
     out = apply_marks(
-        repo.drop("_k"),
+        repo,
         marks,
         author="orcid:0000-0000-0000-0000",
         today=datetime.date(2026, 8, 16),

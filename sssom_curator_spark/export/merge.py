@@ -1,12 +1,13 @@
 """Merge export (SURVEY.md S6/U1/U5/C5): union → standardize → subset map →
-canonical TSV.
+canonical TSV, JSON or OWL.
 
 Reference lifecycle (export/merge.py:24-158): union the four files in file
 order, bioregistry-standardize prefixes (``chebi`` → ``CHEBI``,
 tests/test_merge.py:109-133), subset the prefix map to used prefixes, and
 write a sorted TSV with metadata header. Here the union/standardize/
-used-prefix steps are DataFrame algebra; only the tiny prefix map and the
-single-file serialization touch the driver.
+used-prefix steps are DataFrame algebra, linted and checkpointed in one
+job (:func:`_export_plan`) that all three sinks stream from; only the tiny
+prefix map and the single-file serialization touch the driver.
 """
 
 from __future__ import annotations
@@ -19,34 +20,16 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from sssom_curator_spark.functions.curie_ops import curie_prefix, standardize_curie
+from sssom_curator_spark.functions.curie_ops import curie_prefix
 from sssom_curator_spark.io.sssom_tsv import (
     _lint_checkpoint,
     _write_tsv,
-    lint_frame,
     render_metadata_header,
+    standardize_frame,
 )
 from sssom_curator_spark.operators.relational import merge_repository
-from sssom_curator_spark.schema import TSV_COLUMN_ORDER
 
-__all__ = [
-    "standardize_frame",
-    "used_prefixes",
-    "merge_to_tsv",
-    "merge_to_json",
-    "merge_to_owl",
-]
-
-
-def standardize_frame(df: DataFrame, alias_map: dict[str, str]) -> DataFrame:
-    """C5 over all CURIE-carrying columns."""
-    out = df
-    for col in ("subject_id", "object_id", "predicate_id"):
-        out = out.withColumn(col, standardize_curie(col, alias_map))
-    out = out.withColumn(
-        "author_id", F.transform("author_id", lambda x: x)  # authors are ORCIDs: already canonical
-    )
-    return out
+__all__ = ["merge_to_tsv", "merge_to_json", "merge_to_owl"]
 
 
 _CURIE_COLUMNS = (
@@ -60,7 +43,7 @@ _CURIE_COLUMNS = (
 
 def _prefix_set() -> Column:
     """Aggregate: the sorted distinct non-empty prefixes of every
-    CURIE-carrying column (export/merge.py:155-156)."""
+    CURIE-carrying column (U5, export/merge.py:155-156)."""
     row = F.concat(
         F.array(*map(curie_prefix, _CURIE_COLUMNS)),
         F.transform(F.coalesce("author_id", F.array()), curie_prefix),
@@ -70,24 +53,27 @@ def _prefix_set() -> Column:
     return F.array_sort(F.array_distinct(F.flatten(F.collect_set(used))))
 
 
-def used_prefixes(df: DataFrame) -> list[str]:
-    """U5 (export/merge.py:155-156): distinct prefixes actually referenced."""
-    return df.agg(_prefix_set().alias("p")).first()["p"]
-
-
-def _merged(frames: dict[str, DataFrame], alias_map: dict[str, str] | None) -> DataFrame:
-    merged = merge_repository(frames).drop("status")
-    return standardize_frame(merged, alias_map) if alias_map else merged
-
-
-def _merged_with_submap(
+def _export_plan(
     frames: dict[str, DataFrame],
     prefix_map: dict[str, str],
     alias_map: dict[str, str] | None,
-) -> tuple[DataFrame, dict[str, str]]:
-    merged = _merged(frames, alias_map)
-    used = set(used_prefixes(merged))
-    return merged, {p: u for p, u in prefix_map.items() if p in used}
+) -> tuple[DataFrame, list[str], dict[str, str]]:
+    """The linted merge every sink serializes, in one checkpoint job.
+
+    Unions the repository files, standardizes prefixes, lints (sort +
+    dedup) and checkpoints the rows. The used-prefix set is observed on
+    the merged rows before the dedup, inside that same job, so the prefix
+    map subset costs no job of its own. Returns ``(checkpointed rows,
+    serialized columns, prefix map subset)``.
+    """
+    merged = merge_repository(frames).drop("status")
+    if alias_map:
+        merged = standardize_frame(merged, alias_map)
+    obs = Observation()
+    merged = merged.observe(obs, _prefix_set().alias("p"))
+    frame, columns = _lint_checkpoint(merged, sort=True, drop_duplicates=True)
+    used = set(obs.get["p"])
+    return frame, columns, {p: u for p, u in prefix_map.items() if p in used}
 
 
 def merge_to_tsv(
@@ -98,17 +84,8 @@ def merge_to_tsv(
     alias_map: dict[str, str] | None = None,
     metadata: dict[str, Any] | None = None,
 ) -> list[str]:
-    """Full merge export. Returns serialized columns.
-
-    The used-prefix set is observed on the merged rows before the dedup,
-    inside the one job that checkpoints the linted rows, so the prefix
-    map subset costs no job of its own.
-    """
-    obs = Observation()
-    merged = _merged(frames, alias_map).observe(obs, _prefix_set().alias("p"))
-    frame, columns = _lint_checkpoint(merged, sort=True, drop_duplicates=True)
-    used = set(obs.get["p"])
-    sub_map = {p: u for p, u in prefix_map.items() if p in used}
+    """Full merge export. Returns serialized columns."""
+    frame, columns, sub_map = _export_plan(frames, prefix_map, alias_map)
     _write_tsv(frame, columns, path, render_metadata_header(sub_map, metadata))
     return columns
 
@@ -119,10 +96,11 @@ def _json_value(value: Any) -> Any:
     return value
 
 
-def _iter_mappings(merged: DataFrame):
-    """Canonically sorted, linted mapping rows as plain dicts (non-null,
-    TSV column order, record_id excluded — reference excludes unset fields
-    via ``model_dump(exclude_none=True)``, export/merge.py:20-21).
+def _iter_mappings(frame: DataFrame, columns: list[str]):
+    """The checkpointed rows of :func:`_export_plan` as plain dicts
+    (non-null, TSV column order, record_id excluded — reference excludes
+    unset fields via ``model_dump(exclude_none=True)``,
+    export/merge.py:20-21).
 
     A GENERATOR over ``toLocalIterator``: the driver holds one partition
     of rows at a time, never the merged set. JSON/OWL merge artifacts are
@@ -137,11 +115,9 @@ def _iter_mappings(merged: DataFrame):
     convenience default). Corpus-scale outputs go through the
     TSV/Iceberg sinks.
     """
-    linted = lint_frame(merged, sort=True, drop_duplicates=True)
-    cols = [c for c in TSV_COLUMN_ORDER if c != "record_id" and c in linted.columns]
-    for row in linted.select(*cols).toLocalIterator(prefetchPartitions=True):
+    for row in frame.select(*columns).toLocalIterator(prefetchPartitions=True):
         d = {}
-        for c in cols:
+        for c in columns:
             v = row[c]
             if v is None or (isinstance(v, list) and not v):
                 continue
@@ -177,7 +153,7 @@ def merge_to_json(
     returned; pass ``False`` at scale to keep driver memory bounded and
     get ``None`` back.
     """
-    merged, sub_map = _merged_with_submap(frames, prefix_map, alias_map)
+    frame, columns, sub_map = _export_plan(frames, prefix_map, alias_map)
     head: dict[str, Any] = {
         **{k: _json_value(v) for k, v in sorted((metadata or {}).items())},
         "curie_map": dict(sorted(sub_map.items())),
@@ -196,7 +172,7 @@ def merge_to_json(
                 continue
             handle.write("[")
             first_row = True
-            for m in _iter_mappings(merged):
+            for m in _iter_mappings(frame, columns):
                 handle.write("\n    " if first_row else ",\n    ")
                 first_row = False
                 handle.write(_json_fragment(m, 4))
@@ -257,14 +233,14 @@ def merge_to_owl(
     (``return_document=True``, default) or ``None`` when the caller opts
     out of driver-side accumulation at SeMRA scale.
     """
-    merged, sub_map = _merged_with_submap(frames, prefix_map, alias_map)
+    frame, columns, sub_map = _export_plan(frames, prefix_map, alias_map)
     declared = {**_OWL_SERIALIZER_PREFIXES, **sub_map}
 
     def lines():
         for p, u in sorted(declared.items()):
             yield f"Prefix({p}:=<{u}>)"
         yield f"Ontology(<{ontology_iri}>"
-        for m in _iter_mappings(merged):
+        for m in _iter_mappings(frame, columns):
             annotations = []
             for slot, pred in _OWL_SLOT_PREDICATES.items():
                 v = m.get(slot)

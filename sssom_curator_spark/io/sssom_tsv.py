@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sssom_curator_spark.functions.curie_ops import curie_prefix, standardize_curie
 from sssom_curator_spark.graph._iterate import checkpoint
+from sssom_curator_spark.operators.relational import exclude_curated
 from sssom_curator_spark.schema import (
     CANONICAL_KEY_COLUMNS,
     CANONICAL_SORT_COLUMNS,
@@ -40,15 +42,15 @@ __all__ = [
     "read_sssom_tsv",
     "read_sssom_url",
     "chain_prefix_maps",
+    "conform_to_mapping_schema",
+    "standardize_frame",
     "lint_frame",
     "write_sssom_tsv",
     "insert_sssom_tsv",
     "render_metadata_header",
 ]
 
-_ARRAY_COLUMNS = {"author_id", "reviewer_id"}
-_DATE_COLUMNS = {"mapping_date", "review_date"}
-_DOUBLE_COLUMNS = {"confidence", "reviewer_agreement"}
+_ARRAY_COLUMNS = ("author_id", "reviewer_id")
 
 
 def parse_metadata_header(path: str) -> tuple[dict[str, str], dict[str, Any], list[str]]:
@@ -100,9 +102,9 @@ def read_sssom_tsv(
 
     The data portion is read distributed (``spark.read.csv`` skips ``#``
     comment lines executor-side, so a multi-GB TSV never touches the
-    driver); dynamic columns are normalized into the fixed
-    :data:`MAPPING_SCHEMA` — missing columns become typed nulls, multi-value
-    author/reviewer cells split on ``|``. The column names come from the
+    driver); multi-value author/reviewer cells split on ``|`` and
+    :func:`conform_to_mapping_schema` normalizes the dynamic columns into
+    the fixed :data:`MAPPING_SCHEMA`. The column names come from the
     driver's header read and are passed as an all-string schema, so the
     scan starts no job to find them.
     """
@@ -115,17 +117,10 @@ def read_sssom_tsv(
         .schema(T.StructType([T.StructField(c, T.StringType()) for c in columns]))
         .csv(path)
     )
-    present = set(columns)
-    projections = []
-    for field in MAPPING_SCHEMA.fields:
-        name = field.name
-        if name not in present:
-            projections.append(F.lit(None).cast(field.dataType).alias(name))
-        elif name in _ARRAY_COLUMNS:
-            projections.append(F.split(F.col(name), r"\|").alias(name))
-        else:
-            projections.append(F.col(name).cast(field.dataType).alias(name))
-    return raw.select(*projections), prefix_map, metadata
+    split = raw.withColumns(
+        {c: F.split(F.col(c), r"\|") for c in _ARRAY_COLUMNS if c in columns}
+    )
+    return conform_to_mapping_schema(split), prefix_map, metadata
 
 
 def read_sssom_url(
@@ -159,8 +154,9 @@ def read_sssom_url(
 def conform_to_mapping_schema(df: DataFrame) -> DataFrame:
     """Project any mapping-shaped frame onto the fixed
     :data:`MAPPING_SCHEMA`: missing columns become typed nulls, present
-    columns cast to the canonical types. The unionByName building block
-    behind :func:`insert_sssom_tsv`."""
+    columns cast to the canonical types, other columns drop. The one
+    mapping-table projection: the TSV scan, :func:`insert_sssom_tsv` and
+    the pipeline's prediction rows all go through it."""
     present = set(df.columns)
     projections = []
     for field in MAPPING_SCHEMA.fields:
@@ -169,6 +165,14 @@ def conform_to_mapping_schema(df: DataFrame) -> DataFrame:
         else:
             projections.append(F.lit(None).cast(field.dataType).alias(field.name))
     return df.select(*projections)
+
+
+def standardize_frame(df: DataFrame, alias_map: dict[str, str]) -> DataFrame:
+    """C5 prefix standardization over the CURIE columns of the mapping
+    tuple (authors are ORCIDs, already canonical)."""
+    return df.withColumns(
+        {c: standardize_curie(c, alias_map) for c in ("subject_id", "object_id", "predicate_id")}
+    )
 
 
 def insert_sssom_tsv(
@@ -196,10 +200,7 @@ def insert_sssom_tsv(
     existing, prefix_map, metadata = read_sssom_tsv(spark, path)
     incoming = conform_to_mapping_schema(include_mappings)
     if alias_map:
-        from sssom_curator_spark.functions.curie_ops import standardize_curie
-
-        for col in ("subject_id", "object_id", "predicate_id"):
-            incoming = incoming.withColumn(col, standardize_curie(col, alias_map))
+        incoming = standardize_frame(incoming, alias_map)
     # `existing` still lazily reads `path`; write_sssom_tsv checkpoints
     # the linted rows before it truncates the file, so the stream never
     # races the overwrite. The file is human-scale (the reference rewrites
@@ -241,28 +242,21 @@ def lint_frame(
 
     sort + dedup + curated-exclusion mirror ``sssom_pydantic.write``'s
     keyword surface (constants.py:100-109, predict/lexical.py:513-521).
-    Exclusion is a left-anti join on the canonical mapping tuple (J5) — the
-    "zombie prediction" removal. At 100 TB both the dedup and the anti-join
-    are shuffles on the same canonical key, so Catalyst/AQE reuses the
-    exchange; the exclude side (curated mappings, human-scale) broadcasts.
+    Exclusion is :func:`~sssom_curator_spark.operators.relational.
+    exclude_curated`, the left-anti join on the canonical mapping tuple
+    (J5) — the "zombie prediction" removal. At 100 TB both the dedup and
+    the anti-join are shuffles on the same canonical key, so Catalyst/AQE
+    reuses the exchange; the exclude side (curated mappings, human-scale)
+    broadcasts.
     """
     out = df
     if exclude_prefixes:
-        subject_prefix = F.substring_index(F.col("subject_id"), ":", 1)
-        object_prefix = F.substring_index(F.col("object_id"), ":", 1)
         out = out.filter(
-            ~subject_prefix.isin(exclude_prefixes) & ~object_prefix.isin(exclude_prefixes)
+            ~curie_prefix("subject_id").isin(exclude_prefixes)
+            & ~curie_prefix("object_id").isin(exclude_prefixes)
         )
     if exclude_mappings is not None:
-        excl = exclude_mappings.select(
-            *[F.col(c).alias(f"_x_{c}") for c in CANONICAL_KEY_COLUMNS]
-        ).distinct()
-        # null-safe equality: predicate_modifier/justification may be null
-        cond = None
-        for c in CANONICAL_KEY_COLUMNS:
-            eq = out[c].eqNullSafe(F.col(f"_x_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        out = out.join(F.broadcast(excl), on=cond, how="left_anti")
+        out = exclude_curated(out, exclude_mappings)
     if drop_duplicates:
         out = out.dropDuplicates(CANONICAL_KEY_COLUMNS)
     if sort:

@@ -1,15 +1,11 @@
 """Per-partition lineage & metrics (north rule: "every stage writes
-per-partition lineage and metrics rows") — at zero hot-path cost.
+per-partition lineage and metrics rows") — at zero hot-path cost, kept
+entirely JVM-side:
 
-v1 wrapped every stage in a pass-through ``mapInPandas``, which forced a
-full Arrow round-trip of the stage's data (including raw html bytes)
-through Python per stage — measurably catastrophic at high parallelism
-(local[32] ran 4× slower than local[8] on the same input). This version
-keeps lineage entirely JVM-side:
-
-- the pipeline *materializes* each stage anyway (persist + count, or a
-  snapshot write); the driver measures wall-clock around that and
-  registers the persisted frame here;
+- the pipeline's eager and snapshot modes *materialize* each stage
+  anyway (persist + count, or a snapshot write); the driver measures
+  wall-clock around that and registers the persisted frame here. The
+  lazy throughput mode registers nothing;
 - per-partition lineage rows come from a
   ``groupBy(spark_partition_id())`` aggregation over the persisted
   output — one cheap cached pass, evaluated only when the metrics table
@@ -42,20 +38,12 @@ class MetricsRegistry:
         *,
         wall_sec: float | None = None,
         rows: int | None = None,
-        materialized: bool = True,
     ) -> None:
-        """Record a stage's output frame (+ wall time).
-
-        ``materialized=False`` marks a stage that composes lazily (fused
-        into its consumer by Catalyst — throughput mode). Such stages get
-        no per-partition lineage rows: enumerating them from ``frame()``
-        would re-execute the whole unmaterialized upstream DAG once per
-        stage. Per-partition lineage belongs to materialized boundaries
-        (snapshot writes / persisted frames), which is also where it is
-        free to collect.
-        """
-        if materialized:
-            self._partition_sources[stage] = df
+        """Record a materialized stage's output frame (+ wall time and row
+        count). Only materialized boundaries (snapshot writes, persisted
+        frames) are registered: enumerating a lazy stage from ``frame()``
+        would re-execute its whole upstream DAG."""
+        self._partition_sources[stage] = df
         if wall_sec is not None:
             self._walls[stage] = wall_sec * 1000.0
         if rows is not None:
@@ -64,10 +52,6 @@ class MetricsRegistry:
     @property
     def stage_rows(self) -> dict[str, int]:
         return dict(self._rows)
-
-    @property
-    def stage_wall_ms(self) -> dict[str, float]:
-        return dict(self._walls)
 
     def frame(self) -> DataFrame:
         """Per-partition lineage rows: (stage, partition_id, rows_in,

@@ -363,9 +363,10 @@ def ngram_jaccard_pairs(
         # lossless pre-gate: jaccard = i/(na+nb-i) <= i/na (since nb >= i),
         # so any qualifying pair has i >= t*na — drops the near-unit-count
         # pair mass (114M rows at sf1.0) before the second sizes join and
-        # the division; the 1e-9 slack keeps ulp-boundary rows for the
-        # exact filter below to decide
-        .filter(F.col("inter") >= F.lit(threshold) * F.col("na") - F.lit(1e-9))
+        # the division. The filter below keeps pairs whose jaccard ROUNDS
+        # (6 places) to >= t, i.e. jaccard >= t - 5e-7, so the gate's slack
+        # covers that rounding window plus an ulp margin
+        .filter(F.col("inter") >= F.lit(threshold - 5.1e-7) * F.col("na"))
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), on="doc_b")
         .select(
             "doc_a",

@@ -27,10 +27,8 @@ __all__ = [
     "merge_repository",
     "prefix_pair_counts",
     "contributor_counts",
-    "file_totals",
     "redundancy_report",
     "paginate",
-    "canonical_sort",
     "enrich_names",
 ]
 
@@ -175,24 +173,6 @@ def contributor_counts(df: DataFrame) -> DataFrame:
     return _contributor_totals(df).orderBy(F.desc("count"), "author")
 
 
-def file_totals(df: DataFrame) -> DataFrame:
-    """A3 (export/summary.py:48-58): per-status mapping count + distinct
-    prefix count over both endpoints. At metrics scale substitute
-    approx_count_distinct (SURVEY.md §2.4 note)."""
-    exploded = df.select(
-        "status",
-        F.explode(F.array(curie_prefix("subject_id"), curie_prefix("object_id"))).alias("p"),
-    )
-    return (
-        exploded.groupBy("status")
-        .agg(
-            (F.count(F.lit(1)) / 2).cast("long").alias("mapping_count"),
-            F.countDistinct("p").alias("prefix_count"),
-        )
-        .orderBy("status")
-    )
-
-
 def redundancy_report(frames: dict[str, DataFrame]) -> DataFrame:
     """A5 (testing.py:126-159): canonical tuples appearing in >1 state, and
     (subject, object) duplicates within a state."""
@@ -222,12 +202,7 @@ def redundancy_report(frames: dict[str, DataFrame]) -> DataFrame:
     return cross_file.unionByName(within)
 
 
-# ------------------------------------------------------ sort / paginate
-
-def canonical_sort(df: DataFrame) -> DataFrame:
-    """O1: the model's total order (see schema.CANONICAL_SORT_COLUMNS)."""
-    return df.orderBy(*CANONICAL_SORT_COLUMNS)
-
+# ------------------------------------------------------------- paginate
 
 def paginate(
     df: DataFrame,

@@ -44,6 +44,7 @@ from sssom_curator_spark.extract import with_extracted_text
 from sssom_curator_spark.functions.scoring import score_match_batch
 from sssom_curator_spark.functions.text_norm import norm_text_col
 from sssom_curator_spark.graph.components import connected_components
+from sssom_curator_spark.io.sssom_tsv import conform_to_mapping_schema
 from sssom_curator_spark.lineage import MetricsRegistry
 from sssom_curator_spark.operators.grounding import all_by_all, annotate_mentions
 from sssom_curator_spark.operators.relational import (
@@ -53,7 +54,6 @@ from sssom_curator_spark.operators.relational import (
 )
 from sssom_curator_spark.operators.similarity import cosine_sim_col
 from sssom_curator_spark.operators.textstats import langid_heuristic, quality_score
-from sssom_curator_spark.schema import MAPPING_SCHEMA
 
 __all__ = ["KGConfig", "build_kg", "aggregate_evidence"]
 
@@ -101,18 +101,16 @@ class KGConfig:
 
 def _as_mapping_rows(df: DataFrame, cfg: KGConfig) -> DataFrame:
     """Project prediction edges into the full MAPPING_SCHEMA column set."""
-    out = df
-    for field in MAPPING_SCHEMA.fields:
-        if field.name not in out.columns:
-            out = out.withColumn(field.name, F.lit(None).cast(field.dataType))
-    out = (
-        out.withColumn("mapping_tool", F.lit(cfg.mapping_tool))
-        .withColumn("mapping_tool_id", F.lit(cfg.mapping_tool_id))
-        .withColumn("mapping_tool_version", F.lit(cfg.mapping_tool_version))
-        .withColumn("mapping_date", F.lit(cfg.mapping_date))
-        .withColumn("status", F.lit("predicted"))
+    stamped = df.withColumns(
+        {
+            "mapping_tool": F.lit(cfg.mapping_tool),
+            "mapping_tool_id": F.lit(cfg.mapping_tool_id),
+            "mapping_tool_version": F.lit(cfg.mapping_tool_version),
+            "mapping_date": F.lit(cfg.mapping_date),
+            "status": F.lit("predicted"),
+        }
     )
-    return with_record_id(out.select(*[f.name for f in MAPPING_SCHEMA.fields]))
+    return with_record_id(conform_to_mapping_schema(stamped))
 
 
 def _with_embedding_confidence(cand: DataFrame, labels: DataFrame) -> DataFrame:
@@ -191,8 +189,8 @@ def build_kg(
       mode — at 100 TB you do not cache intermediate page-sized frames.
       **Lazy-mode callers own unpersisting ``out["mappings"]``** once
       they are done with the outputs; build_kg cannot know when the last
-      consumer has run. Lazy stages are registered without per-partition
-      lineage (see :meth:`MetricsRegistry.register_stage`).
+      consumer has run. Lazy mode records no stage metrics: no wall
+      clock, no row count and no per-partition lineage.
     """
     cfg = config or KGConfig()
     reg = metrics or MetricsRegistry(spark)
@@ -206,9 +204,7 @@ def build_kg(
             reg.register_stage(metric_name, frame, wall_sec=wall)
             return frame
         if not eager:
-            frame = compute()
-            reg.register_stage(metric_name, frame, materialized=False)
-            return frame
+            return compute()
         frame = compute().persist()
         rows = frame.count()
         reg.register_stage(

@@ -3,8 +3,8 @@
 The reference ships integrity tests as a product feature
 (/root/reference/src/sssom_curator/testing.py:42-195), run by the ``test``
 CLI (repository.py:918-937). Each check here returns a DataFrame of
-violations (empty = pass) so the suite runs distributed and composes into
-one action; ``run_integrity_suite`` evaluates all of them in one pass.
+violations (empty = pass), so every check runs distributed;
+``run_integrity_suite`` counts each one, one ``count()`` job per check.
 """
 
 from __future__ import annotations
@@ -70,7 +70,8 @@ def check_redundancy(repo: DataFrame) -> DataFrame:
 
 
 def run_integrity_suite(repo: DataFrame, prefix_map: dict[str, str]) -> dict[str, int]:
-    """Run all distributed checks; returns violation counts per check."""
+    """Run all distributed checks, one ``count()`` job each; returns
+    violation counts per check."""
     checks = {
         "justification_vocab": check_justification_vocab(repo),
         "predictions_not_manual": check_predictions_not_manual(repo),

@@ -453,3 +453,16 @@ class TestNgramJaccardPreGate:
         )
         out = ngram_jaccard_pairs(docs, shingle_n=1, threshold=0.5).collect()
         assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in out] == [(1, 2, 0.5)]
+
+    def test_rounding_window_pair_kept(self, spark):
+        # 3-gram sets of 6 and 1 shingles sharing 1: j = 1/6 rounds to
+        # 0.166667, so threshold 0.166667 keeps the pair although the
+        # unrounded 1/6 is below it
+        docs = spark.createDataFrame(
+            [(1, "a b c d e f g h"), (2, "c d e")], "doc_id long, text string"
+        )
+        for threshold in (0.166666, 0.166667):
+            out = ngram_jaccard_pairs(docs, shingle_n=3, threshold=threshold).collect()
+            assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in out] == [
+                (1, 2, 0.166667)
+            ], threshold

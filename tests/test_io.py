@@ -9,18 +9,26 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
-from sssom_curator_spark.export.merge import merge_to_tsv, standardize_frame
-from sssom_curator_spark.io.sssom_tsv import read_sssom_tsv, write_sssom_tsv
+from sssom_curator_spark.export.merge import merge_to_json, merge_to_owl, merge_to_tsv
+from sssom_curator_spark.io.sssom_tsv import (
+    conform_to_mapping_schema,
+    read_sssom_tsv,
+    standardize_frame,
+    write_sssom_tsv,
+)
 from sssom_curator_spark.operators.relational import merge_repository
+from sssom_curator_spark.pipeline import build_kg
 from sssom_curator_spark.schema import (
     CANONICAL_KEY_COLUMNS,
     MAPPING_SCHEMA,
     STATUSES,
     TSV_COLUMN_ORDER,
 )
-from sssom_curator_spark.sources.fixtures import PREFIX_MAP, seed_repository
+from sssom_curator_spark.sources.fixtures import PREFIX_MAP, seed_labels, seed_repository
+from sssom_curator_spark.sources.pages import generate_pages
 
 MAPPING_SET_ID = "https://example.org/ms/merged.sssom.tsv"
 
@@ -160,6 +168,51 @@ class TestExportJobs:
         out = str(tmp_path / "merged.sssom.tsv")
         _, n_jobs = count_jobs(lambda: merge_to_tsv(frames, out, prefix_map=PREFIX_MAP))
         assert n_jobs <= MERGE_TO_TSV_JOBS
+
+    @pytest.mark.parametrize("sink", [merge_to_json, merge_to_owl], ids=["json", "owl"])
+    def test_json_and_owl_share_the_tsv_plan(self, spark, tmp_path, count_jobs, sink):
+        # one lint checkpoint with the prefix set observed on it, then the
+        # row stream: no job of their own for the prefix map subset
+        frames = _frames(spark)
+        out = str(tmp_path / "merged.out")
+        _, n_jobs = count_jobs(lambda: sink(frames, out, prefix_map=PREFIX_MAP))
+        assert n_jobs <= MERGE_TO_TSV_JOBS
+
+
+def _read_back(spark, tmp_path):
+    path = str(tmp_path / "schema.sssom.tsv")
+    write_sssom_tsv(seed_repository(spark).drop("status"), path, prefix_map=PREFIX_MAP)
+    return read_sssom_tsv(spark, path)[0]
+
+
+def _conformed(spark, tmp_path):
+    # a mistyped column, an extra column and missing ones
+    repo = seed_repository(spark).select("subject_id", "object_id", "confidence")
+    return conform_to_mapping_schema(
+        repo.withColumn("confidence", F.col("confidence").cast("float")).withColumn(
+            "extra", F.lit(1)
+        )
+    )
+
+
+def _predicted(spark, tmp_path):
+    out = build_kg(spark, generate_pages(spark, 10), seed_labels(spark), materialize=False)
+    out["mappings"].unpersist()
+    return out["mappings"]
+
+
+class TestMappingSchema:
+    """Every producer of mapping rows yields exactly MAPPING_SCHEMA's
+    column names and types, in order."""
+
+    @pytest.mark.parametrize(
+        "produce",
+        [_read_back, _conformed, _predicted],
+        ids=["read_sssom_tsv", "conform_to_mapping_schema", "build_kg"],
+    )
+    def test_names_and_types(self, spark, tmp_path, produce):
+        got = [(f.name, f.dataType) for f in produce(spark, tmp_path).schema.fields]
+        assert got == [(f.name, f.dataType) for f in MAPPING_SCHEMA.fields]
 
 
 class TestCurationDateStamp:
